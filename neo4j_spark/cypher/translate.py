@@ -2651,27 +2651,30 @@ class Translator:
 
     def _nfa_eligible(self, part: A.PatternPart, pre: list
                       ) -> Optional[str]:
-        """Route a SHORTEST-family selector to an NFA product-graph BFS
-        (StatefulShortestPath LP:2290) when the pattern has an UNBOUNDED
-        quantifier — the enumerating Trail path must truncate (now:
-        raise) there, the NFA's (node, state) visited set terminates
-        exactly.  Returns the variant to run, or None for the Trail path:
+        """Route a SHORTEST-family selector to the NFA product-graph BFS
+        (StatefulShortestPath LP:2290, operators/paths._nfa_search) when
+        the pattern has an UNBOUNDED quantifier — the enumerating Trail
+        path must truncate (now: raise) there, the NFA's (node, state)
+        visited set terminates exactly.  Single-relationship
+        shortestPath() patterns go to the bidirectional BFS
+        (paths.shortest_path) before this is asked.  Returns the payload
+        the search carries, or None for the Trail path:
 
-        - ``"count"``: length-only BFS (operators/paths.nfa_shortest) —
-          no path/group variables are consumed, frontier rows carry no
-          arrays.
-        - ``"track"``: path-propagating BFS (nfa_shortest_tracked) —
-          the statement reads the path variable or QPP group variables,
-          so frontier rows carry path state (PGPathPropagatingBFS).
+        - ``"count"`` (paths.nfa_shortest): no path or group variable is
+          consumed; frontier rows carry only a walk count.
+        - ``"track"`` (paths.nfa_shortest_tracked): the statement reads
+          the path variable or QPP group variables, or k > 1 needs path
+          identity; frontier rows carry the path.
 
-        Both variants share one structural exactness guard: every
-        relationship directed, every QPP at most one mandatory copy
-        (min <= 1), and the TYPE sets of all transitions pairwise
-        disjoint — then NO walk can repeat a relationship (an edge
-        belongs to exactly one transition whose source product-state the
-        visited set admits once), so walks are trails and the visited-set
-        pruning is exact.  Anything else keeps the enumerating Trail path
-        (exact per-path uniqueness, dynamic unroll)."""
+        The choice follows from the query alone.  Both payloads share one
+        structural exactness guard: every relationship directed, every
+        QPP at most one mandatory copy (min <= 1), and the TYPE sets of
+        all transitions pairwise disjoint — then NO walk can repeat a
+        relationship (an edge belongs to exactly one transition whose
+        source product-state the visited set admits once), so walks are
+        trails and the visited-set pruning is exact.  Anything else keeps
+        the enumerating Trail path (exact per-path uniqueness, dynamic
+        unroll)."""
         sel, k = part.selector, part.selector_k or 1
         if sel not in ("shortest", "allShortest", "shortestGroups",
                        "shortestK", "anyK"):
@@ -2683,7 +2686,7 @@ class Translator:
             return None
         has_unbounded = False
         # k > 1 needs path identity to tell the k winners apart (the
-        # counting BFS collapses paths per product state); ANY k is
+        # count payload collapses paths per product state); ANY k is
         # served by the k shortest (any k paths satisfy the selector)
         needs_track = k > 1
         type_sets: List[frozenset] = []
@@ -2720,8 +2723,8 @@ class Translator:
                                                 "shortestGroups") \
                         and not needs_track:
                     # the {0,} epsilon skip + loop-back edge inflate the
-                    # COUNTING variant's walk multiplicities; the tracked
-                    # variant dedups real paths, so route there
+                    # count payload's walk multiplicities; the track
+                    # payload dedups real paths, so route there
                     needs_track = True
             elif isinstance(el, A.RelPat):
                 if el.var_length or not admit_rel(el):
@@ -3581,68 +3584,29 @@ class Translator:
 
     def _resolve_path_rels(self, df: DataFrame, pvar: str) -> DataFrame:
         """Replace a path's core rel structs (id/src/dst/type) with full
-        property-carrying structs: one posexplode + join against the
-        (unified-schema) rel scan + positional regroup — only when the
-        statement reads rel properties off the path."""
-        from ..operators.paths import _pin
+        property-carrying structs — only when the statement reads rel
+        properties off the path."""
+        from ..operators.paths import hydrate
 
-        rid = self._anon_var("rrow")
-        df = _pin(df.withColumn(rid, F.monotonically_increasing_id()))
-        # outer explode: zero-length paths (empty rel array) must survive
-        ex = df.select(
-            F.col(rid),
-            F.posexplode_outer(
-                F.col(pvar).getField("rels")).alias("__pos", "__pr"))
-        rscan = self._rel_scan(A.RelPat(None), "__prel") \
-                    .drop("__from", "__to")
-        joined = ex.join(
-            rscan,
-            F.col("__pr").getField("_id") == F.col("__prel").getField("_id"),
-            "left")
-        agg = joined.groupBy(rid).agg(
-            F.filter(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct(F.col("__pos").alias("o"),
-                                 F.col("__prel").alias("r")))),
-                    lambda x: x.getField("r")),
-                lambda r: r.isNotNull()).alias("__prels"))
-        out = df.join(agg, rid)
-        out = out.withColumn(
-            pvar,
-            F.struct(F.col(pvar).getField("nodes").alias("nodes"),
-                     F.col("__prels").alias("rels")))
-        return out.drop(rid, "__prels")
+        scan = self._rel_scan(A.RelPat(None), "__prel").drop("__from",
+                                                              "__to")
+        df = hydrate(self, df, F.col(pvar).getField("rels"), scan, "__prel",
+                     "__prels")
+        rels = F.filter(F.col("__prels"), lambda r: r.isNotNull())
+        return df.withColumn(pvar, F.struct(
+            F.col(pvar).getField("nodes").alias("nodes"),
+            rels.alias("rels"))).drop("__prels")
 
     def _resolve_path_nodes(self, df: DataFrame, pvar: str) -> DataFrame:
-        """Replace a path's id-only node structs with full node structs:
-        one posexplode + join against the (unified-schema) node frames +
-        positional regroup.  The row id is pinned so both sides of the
-        self-join see the same nondeterministic assignment."""
-        from ..operators.paths import _pin
+        """Replace a path's id-only node structs with full node structs."""
+        from ..operators.paths import hydrate
 
-        rid = self._anon_var("prow")
-        df = _pin(df.withColumn(rid, F.monotonically_increasing_id()))
-        ex = df.select(
-            F.col(rid),
-            F.posexplode(F.col(pvar).getField("nodes")).alias("__pos", "__pid"))
-        nscan = self._node_scan(A.NodePat(None), "__pnode")
-        joined = ex.join(
-            nscan,
-            F.col("__pid").getField("_id") == F.col("__pnode").getField("_id"),
-            "left")
-        agg = joined.groupBy(rid).agg(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("__pos").alias("o"),
-                             F.col("__pnode").alias("n")))),
-                lambda x: x.getField("n")).alias("__pnodes"))
-        out = df.join(agg, rid)
-        out = out.withColumn(
-            pvar,
-            F.struct(F.col("__pnodes").alias("nodes"),
-                     F.col(pvar).getField("rels").alias("rels")))
-        return out.drop(rid, "__pnodes")
+        scan = self._node_scan(A.NodePat(None), "__pnode")
+        df = hydrate(self, df, F.col(pvar).getField("nodes"), scan,
+                     "__pnode", "__pnodes")
+        return df.withColumn(pvar, F.struct(
+            F.col("__pnodes").alias("nodes"),
+            F.col(pvar).getField("rels").alias("rels"))).drop("__pnodes")
 
     # ---- subquery-predicate lowering ------------------------------------
 

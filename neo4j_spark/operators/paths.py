@@ -3,31 +3,44 @@
 These are the operators that cannot be a single Catalyst plan because their
 shape depends on the data (SURVEY §4.2): the reference implements them as
 pipes (``pipes/VarLengthExpandPipe.scala:83``,
-``pipes/ShortestPathPipe.scala:39`` wrapping the bidirectional BFS in
-``community/graph-algo/.../ShortestPath.java:81``).  Here they are
+``pipes/ShortestPathPipe.scala:39``, ``pipes/StatefulShortestPathPipe``;
+the bidirectional BFS is ``ShortestPath.java:81``).  Here they are
 driver-side loops over DataFrame joins.
+
+Entry points:
+
+- ``var_expand``: one trail level loop (``_trail_levels``), run forward
+  from the bound rows or backward from a small labeled target set.
+- ``shortest_path``: shortestPath / allShortestPaths over a single
+  var-length relationship, a meet-in-the-middle bidirectional BFS.
+- ``nfa_shortest`` / ``nfa_shortest_tracked``: SHORTEST selectors over
+  unbounded quantified patterns, one product-graph BFS (``_nfa_search``)
+  carrying a ``count`` payload (walk counts, length-only use) or a
+  ``track`` payload (the paths themselves, for path and group variables).
 
 Scale design:
 - Every level is a hash join on node ids; the frontier stays partitioned by
   the join key and AQE handles the shrinking/skewed frontier.
 - **Direction choice** (the Spark analog of the reference's bidirectional
   BFS seeding from the cheaper side): when the far endpoint is a small
-  labeled set and the near side is large, we run the loop *backward* from
-  the far endpoint over reversed edges and join the (start, end) results
-  back to the rowstream.  A `(c:Customer)-[*..3]->(r:Region)` BFS forward
-  walks every order/lineitem edge (O(|E|) rows per level, each carrying a
-  path array); backward from 5 regions the frontier never exceeds the
-  customer count.  Decided by two cheap capped counts, the local stand-in
-  for catalog statistics (GraphStatistics.scala:27-65).
-- Var-length frontiers are pinned per level (each level is consumed by both
-  the next frontier join and the final level union); shallow BFS stays one
-  lazy codegen'd plan, deep BFS pins levels and early-stops on an empty
-  frontier (both A/B-measured at sf0.1 — see _pin).
+  labeled set and the near side is large, ``var_expand`` runs *backward*
+  from the far endpoint over reversed edges and joins the (start, end)
+  results back to the rowstream.  A `(c:Customer)-[*..3]->(r:Region)` BFS
+  forward walks every order/lineitem edge (O(|E|) rows per level, each
+  carrying a path array); backward from 5 regions the frontier never
+  exceeds the customer count.  Decided by two cheap capped counts, the
+  local stand-in for catalog statistics (GraphStatistics.scala:27-65).
+- Var-length levels are pinned (each level is consumed by both the next
+  frontier join and the final level union); shallow shortest-path BFS
+  stays one lazy plan, deep BFS pins levels and stops early on an empty
+  frontier.  The NFA search truncates lineage per level with
+  localCheckpoint.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+import dataclasses
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F, Window as W
 from pyspark.storagelevel import StorageLevel
@@ -44,9 +57,6 @@ def _pin(df: DataFrame) -> DataFrame:
     Persisting makes each level compute once; blocks are LRU-evicted /
     cleared by the session, matching the reference's per-level frontier
     materialization (ShortestPath.java keeps frontier sets in memory)."""
-    import os
-    if os.environ.get("NEO4J_SPARK_PIN_LEVELS", "1") == "0":
-        return df
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 REL_CORE_T = "array<struct<_id:bigint,_src:bigint,_dst:bigint,_type:string>>"
@@ -54,6 +64,13 @@ REL_CORE_T = "array<struct<_id:bigint,_src:bigint,_dst:bigint,_type:string>>"
 
 def _rel_ids(col: Column) -> Column:
     return F.transform(col, lambda x: x.getField("_id"))
+
+
+def _union(frames: List[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def _reverse_scan(scan: DataFrame) -> DataFrame:
@@ -89,8 +106,7 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
     predicate is enforced on the rowstream independently, so using it to
     prune edge types can only drop rows the label filter would drop
     anyway) — feeds schema-reachability pruning (schema_prune.py)."""
-    from .schema_prune import (flipped, level_all_sets, maybe_shared_all,
-                               restricted_scans)
+    from .schema_prune import flipped, level_all_sets, restricted_scans
 
     min_len = rp.min_len if rp.min_len is not None else 1
     max_len = rp.max_len if rp.max_len is not None else tr.max_var_length
@@ -108,6 +124,18 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
         return s
 
     scan = _filtered(scan)
+
+    def level_scans(rpat: A.RelPat, left, right, reverse: bool = False
+                    ) -> List[DataFrame]:
+        sets, lefts, rights = (level_all_sets(tr.graph, rpat, left, right,
+                                              max_len)
+                               or (None, None, None))
+        scans = restricted_scans(tr, rp, sets, "__r", slim, max_len,
+                                 reverse=reverse, lefts=lefts, rights=rights)
+        if scans is None:
+            return [_reverse_scan(scan) if reverse else scan] * max_len
+        return [_filtered(s) for s in scans]
+
     nvar_bound = nvar in df.columns
     tgt_labels = (list(np.labels) if np.labels
                   else tr.labels_of(nvar) if nvar_bound else None)
@@ -115,67 +143,41 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
     if not nvar_bound and (np.labels or np.props is not None):
         tscan = tr._node_scan(np, nvar)
     if not dynamic_stop and _prefer_backward(df, prev_var, tscan):
-        # backward traversal: roots are the target labels, the distance
-        # budget runs toward the start labels
-        bsets, blefts, brights = maybe_shared_all(level_all_sets(
-            tr.graph, flipped(rp), tgt_labels, start_labels, max_len))
-        bscans = restricted_scans(tr, rp, bsets, "__r", slim, max_len,
-                                  reverse=True, lefts=blefts,
-                                  rights=brights)
-        if bscans is not None:
-            bscans = [_filtered(s) for s in bscans]
-        return _var_expand_backward(tr, df, prev_var, scan, tscan, rvar, nvar,
-                                    min_len, max_len, rel_type, bscans)
+        # backward from the target labels over reversed edges (the distance
+        # budget runs toward the start labels), carrying only ids and the
+        # rel array; the rowstream joins back on the reached start id and
+        # the rel array is reversed to read start->target
+        base = tscan.select(
+            F.col(nvar).getField("_id").alias("__tgt"),
+            F.col(nvar).getField("_id").alias("__end"),
+            F.array().cast(f"array<{rel_type}>").alias(rvar))
+        matched, _ = _trail_levels(
+            base, level_scans(flipped(rp), tgt_labels, start_labels,
+                              reverse=True),
+            rvar, min_len, max_len)
+        matched = matched.withColumn(rvar, F.reverse(F.col(rvar)))
+        out = df.join(matched,
+                      F.col(prev_var).getField("_id") == F.col("__end"))
+        out = out.join(tscan, F.col("__tgt") == F.col(nvar).getField("_id"))
+        return out.drop("__end", "__tgt")
 
-    fsets, flefts, frights = maybe_shared_all(
-        level_all_sets(tr.graph, rp, start_labels, tgt_labels, max_len))
-    fscans = restricted_scans(tr, rp, fsets, "__r", slim, max_len,
-                              lefts=flefts, rights=frights)
-    if fscans is not None:
-        fscans = [_filtered(s) for s in fscans]
     base = df.withColumn("__end", F.col(prev_var).getField("_id")) \
              .withColumn(rvar, F.array().cast(f"array<{rel_type}>"))
-    levels: List[DataFrame] = []
-    if min_len == 0:
-        levels.append(base)
-    frontier = base
-    cap_alive = True  # dynamic stop never saw an empty level
-    for k in range(1, max_len + 1):
-        sc = fscans[k - 1] if fscans is not None else scan
-        step = frontier.join(sc, F.col("__end") == F.col("__from"))
-        step = step.filter(
-            ~F.array_contains(_rel_ids(F.col(rvar)), F.col("__r").getField("_id")))
-        step = (step.withColumn(rvar, F.array_append(F.col(rvar), F.col("__r")))
-                    .withColumn("__end", F.col("__to"))
-                    .drop("__from", "__to", "__r"))
-        if k < max_len:  # last level has a single consumer — no reuse
-            step = _pin(step)
-        if dynamic_stop and k > min_len and step.isEmpty():
-            cap_alive = False
-            break
-        if k >= min_len:
-            levels.append(step)
-        frontier = step
+    out, last = _trail_levels(
+        base, level_scans(rp, start_labels, tgt_labels), rvar, min_len,
+        max_len, dynamic_stop)
+    # the frontier was never observed empty within max_len levels — probe
+    # one more extension; refusing to silently truncate an unbounded -[*]->
+    # enumeration (trail uniqueness guarantees the probe is exact: no
+    # k+1-trail exists without a k-trail prefix)
+    if dynamic_stop and last is not None \
+            and not _trail_join(last, scan, rvar).isEmpty():
+        from ..cypher.translate import TranslateError
 
-    if dynamic_stop and cap_alive:
-        # the frontier was never observed empty within max_len levels —
-        # probe one more extension; refusing to silently truncate an
-        # unbounded -[*]-> enumeration (trail uniqueness guarantees the
-        # probe is exact: no k+1-trail exists without a k-trail prefix)
-        probe = frontier.join(scan, F.col("__end") == F.col("__from")) \
-            .filter(~F.array_contains(_rel_ids(F.col(rvar)),
-                                      F.col("__r").getField("_id")))
-        if not probe.isEmpty():
-            from ..cypher.translate import TranslateError
-
-            raise TranslateError(
-                f"unbounded var-length expansion still has matches at "
-                f"{max_len} hops; set a bound or raise the translator's "
-                f"max_var_length (refusing to silently truncate)")
-
-    out = levels[0]
-    for l in levels[1:]:
-        out = out.unionByName(l)
+        raise TranslateError(
+            f"unbounded var-length expansion still has matches at "
+            f"{max_len} hops; set a bound or raise the translator's "
+            f"max_var_length (refusing to silently truncate)")
 
     if nvar_bound:
         out = out.filter(F.col("__end") == F.col(nvar).getField("_id"))
@@ -185,46 +187,37 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
     return out.drop("__end")
 
 
-def _var_expand_backward(tr, df: DataFrame, prev_var: str, scan: DataFrame,
-                         tscan: DataFrame, rvar: str, nvar: str,
-                         min_len: int, max_len: int, rel_type: str,
-                         scans: Optional[List[DataFrame]] = None) -> DataFrame:
-    """VarExpand run from the (small) target side over reversed edges.
+def _trail_join(frontier: DataFrame, scan: DataFrame, rvar: str
+                ) -> DataFrame:
+    """Frontier rows joined to their next relationship ``__r``, dropping
+    relationships already on the row's trail ``rvar``."""
+    return frontier.join(scan, F.col("__end") == F.col("__from")).filter(
+        ~F.array_contains(_rel_ids(F.col(rvar)), F.col("__r").getField("_id")))
 
-    BFS carries only ids + the rel array (no bound row payload); the
-    rowstream joins back on the reached start id, and the rel array is
-    reversed at the end so results are oriented start->target.  ``scans``:
-    optional per-level schema-pruned scans (already edge-reversed)."""
-    rev = _reverse_scan(scan)
-    base = tscan.select(
-        F.col(nvar).getField("_id").alias("__tgt"),
-        F.col(nvar).getField("_id").alias("__end"),
-        F.array().cast(f"array<{rel_type}>").alias(rvar))
-    levels: List[DataFrame] = []
-    if min_len == 0:
-        levels.append(base)
+
+def _trail_levels(base: DataFrame, scans: List[DataFrame], rvar: str,
+                  min_len: int, max_len: int, dynamic_stop: bool = False
+                  ) -> Tuple[DataFrame, Optional[DataFrame]]:
+    """Trail level loop: extend ``base`` rows (``__end`` = current node
+    id, ``rvar`` = rel array) one relationship per level over level k's
+    scan ``scans[k-1]``.  Returns the union of levels min_len..max_len and
+    the last frontier.  ``dynamic_stop`` ends the loop at the first empty
+    level past min_len; the last frontier is then None."""
+    levels = [base] if min_len == 0 else []
     frontier = base
     for k in range(1, max_len + 1):
-        sc = scans[k - 1] if scans is not None else rev
-        step = frontier.join(sc, F.col("__end") == F.col("__from"))
-        step = step.filter(
-            ~F.array_contains(_rel_ids(F.col(rvar)), F.col("__r").getField("_id")))
-        step = (step.withColumn(rvar, F.array_append(F.col(rvar), F.col("__r")))
-                    .withColumn("__end", F.col("__to"))
-                    .drop("__from", "__to", "__r"))
-        if k < max_len:
+        step = (_trail_join(frontier, scans[k - 1], rvar)
+                .withColumn(rvar, F.array_append(F.col(rvar), F.col("__r")))
+                .withColumn("__end", F.col("__to"))
+                .drop("__from", "__to", "__r"))
+        if k < max_len:  # last level has a single consumer — no reuse
             step = _pin(step)
+        if dynamic_stop and k > min_len and step.isEmpty():
+            return _union(levels), None
         if k >= min_len:
             levels.append(step)
         frontier = step
-    matched = levels[0]
-    for l in levels[1:]:
-        matched = matched.unionByName(l)
-    matched = matched.withColumn(rvar, F.reverse(F.col(rvar)))
-    out = df.join(matched,
-                  F.col(prev_var).getField("_id") == F.col("__end"))
-    out = out.join(tscan, F.col("__tgt") == F.col(nvar).getField("_id"))
-    return out.drop("__end", "__tgt")
+    return _union(levels), frontier
 
 
 def _bfs_levels(roots: DataFrame, scan: DataFrame, depth: int,
@@ -311,8 +304,6 @@ def _length_only_use(root, pvar: str) -> bool:
     (compiler/planner/logical/plans/rewriter/pruningVarExpander.scala):
     when no one consumes the path's contents, the search need not carry
     them."""
-    import dataclasses
-
     ok = True
 
     def walk(node) -> None:
@@ -430,18 +421,19 @@ def shortest_path(tr, df: Optional[DataFrame], part: A.PatternPart,
     # distance budget running toward the OTHER endpoint's labels (the meet
     # can happen anywhere, so the budget at level k is max_len - k for
     # both sides)
-    from .schema_prune import (flipped, level_all_sets, maybe_shared_all,
-                               restricted_scans)
+    from .schema_prune import flipped, level_all_sets, restricted_scans
 
     a_labels = (list(a_pat.labels) if a_pat.labels
                 else tr.labels_of(avar))
     b_labels = (list(b_pat.labels) if b_pat.labels
                 else tr.labels_of(bvar))
     slim_scan = track_path != "full"
-    f_sets, f_lefts, f_rights = maybe_shared_all(
-        level_all_sets(tr.graph, rp, a_labels, b_labels, max_len))
-    b_sets, b_lefts, b_rights = maybe_shared_all(level_all_sets(
-        tr.graph, flipped(rp), b_labels, a_labels, max_len))
+    f_sets, f_lefts, f_rights = (
+        level_all_sets(tr.graph, rp, a_labels, b_labels, max_len)
+        or (None, None, None))
+    b_sets, b_lefts, b_rights = (
+        level_all_sets(tr.graph, flipped(rp), b_labels, a_labels, max_len)
+        or (None, None, None))
     f_scans = restricted_scans(tr, rp, f_sets, "__r", slim_scan, fb,
                                lefts=f_lefts, rights=f_rights)
     b_scans = restricted_scans(tr, rp, b_sets, "__r", slim_scan, bb,
@@ -456,11 +448,9 @@ def shortest_path(tr, df: Optional[DataFrame], part: A.PatternPart,
         renames = {"__root": f"__{side}root", "__node": f"__{side}node",
                    "__depth": f"__{side}d", "__rels": f"__{side}rels",
                    "__nodes": f"__{side}nodes"}
-        out = None
-        for lvl in levels:
-            r = lvl.select(*[F.col(c).alias(renames[c]) for c in lvl.columns])
-            out = r if out is None else out.unionByName(r)
-        return out
+        return _union([
+            lvl.select(*[F.col(c).alias(renames[c]) for c in lvl.columns])
+            for lvl in levels])
 
     pf = _cat(f_levels, "f")
     pb = _cat(b_levels, "b")
@@ -612,7 +602,7 @@ def _nfa_edges(tr, rp: A.RelPat, src_set, dst_set,
     """(__from, __to [, __r]) edge frame for one NFA transition, with the
     adjacent node predicates pushed into the scan as semi-joins.
     ``core``: also carry the rel-core struct (id/src/dst/type) as ``__r``
-    for the path-propagating BFS."""
+    for the ``track`` payload."""
     need_full = (core or rp.where is not None
                  or (rp.props is not None and rp.props.items))
     if not need_full:
@@ -663,7 +653,7 @@ def nfa_compile(tr, els: List, core: bool = False) -> _NFA:
     iteration whose exit has an epsilon back-edge to its entry; {0,} adds
     an epsilon skipping the loop entirely.  Node patterns constrain the
     state they occupy via state_sets.  ``core``: edge frames carry the
-    rel-core struct for the path-propagating variant; transitions record
+    rel-core struct for the ``track`` payload; transitions record
     src/dst/rel variable names so group variables can be re-derived from
     a path's per-step transition ids."""
     nfa = _NFA()
@@ -749,96 +739,141 @@ def nfa_compile(tr, els: List, core: bool = False) -> _NFA:
     return nfa
 
 
-def nfa_shortest(tr, df: Optional[DataFrame], part: A.PatternPart,
-                 pending: List[A.Expr]) -> DataFrame:
-    """StatefulShortestPath (LP:2290) for arbitrary element patterns with
-    UNBOUNDED quantifiers: BFS over the (node x NFA-state) product graph
-    (reference ``runtime-util .../PGPathPropagatingBFS``), with
-    shortest-walk counting for ALL SHORTEST multiplicity.
+_KEY = ["__s", "__n", "__st"]
+_PATH = ["__rels", "__ns", "__trs", "__pid"]
 
-    Termination does NOT depend on a repetition cap: the visited set over
+
+@dataclasses.dataclass
+class _Payload:
+    """What an NFA frontier row carries besides its (start, node, state)
+    key, and how the search treats it."""
+    cols: List[str]                            # payload column names
+    seed: List[Column]                         # their level-0 values
+    step: Callable[[int], List[Column]]        # values after transition i
+    reduce: Callable[[DataFrame], DataFrame]   # merge rows per level
+    core: bool = False     # edge frames carry the rel-core struct __r
+    trail: bool = False    # reject reused rels, no visited-set pruning
+    budget: Optional[int] = None  # max live rows per level
+
+
+def _count_payload() -> _Payload:
+    """``count``: ``__c`` = the number of shortest walks reaching the
+    product state, summed per state (ALL SHORTEST multiplicity).  Rows
+    carry no arrays, so each level is a join and a map-side-combinable
+    sum."""
+    return _Payload(
+        cols=["__c"],
+        seed=[F.lit(1).cast("long").alias("__c")],
+        step=lambda ti: [F.col("__c")],
+        reduce=lambda rows: rows.groupBy(*_KEY).agg(
+            F.sum("__c").alias("__c")))
+
+
+def _track_payload(tr, part: A.PatternPart) -> _Payload:
+    """``track``: the path itself — rel-core structs, node ids, transition
+    ids and a path id (the zero-padded rel-id sequence, which orders
+    paths deterministically).
+
+    At k == 1 one min-path-id representative survives per product state
+    (ANY / SHORTEST), or every min-depth path does (ALL SHORTEST).  At
+    k > 1 per-state pruning is unsound under relationship uniqueness (a
+    suffix valid for one admitted prefix may share an edge with another,
+    and a 2-cycle would admit [e1, e2, e1]), so the search enumerates
+    trails: the step join rejects relationships already on the path and
+    every distinct trail per state survives.  Enumeration is checked
+    against ``neo4j_spark.nfa.maxFrontierPaths`` per level so a
+    combinatorial path set fails loudly instead of exhausting memory."""
+    k = part.selector_k or 1
+    enumerate_ = k > 1 or part.selector in ("allShortest", "shortestGroups")
+
+    def step(ti: int) -> List[Column]:
+        return [
+            F.array_append(F.col("__rels"), F.col("__r")).alias("__rels"),
+            F.array_append(F.col("__ns"), F.col("__to")).alias("__ns"),
+            F.array_append(F.col("__trs"), F.lit(ti)).alias("__trs"),
+            F.concat(F.col("__pid"), F.lit(","), F.format_string(
+                "%019d", F.col("__r").getField("_id"))).alias("__pid")]
+
+    def reduce(rows: DataFrame) -> DataFrame:
+        if enumerate_:
+            # eps copies of the same path dedup here
+            return rows.dropDuplicates([*_KEY, "__pid"])
+        # min_by is a plain aggregate: partial (map-side) combine
+        return (rows.groupBy(*_KEY)
+                .agg(F.min_by(F.struct(*_PATH), F.col("__pid")).alias("__p"))
+                .select(*_KEY, *[F.col(f"__p.{c}").alias(c) for c in _PATH]))
+
+    return _Payload(
+        cols=_PATH,
+        seed=[F.array().cast(REL_CORE_T).alias("__rels"),
+              F.array().cast("array<bigint>").alias("__ns"),
+              F.array().cast("array<int>").alias("__trs"),
+              F.lit("").alias("__pid")],
+        step=step, reduce=reduce, core=True, trail=k > 1,
+        budget=(int(tr.spark.conf.get("neo4j_spark.nfa.maxFrontierPaths",
+                                      "1000000"))
+                if enumerate_ else None))
+
+
+def _nfa_search(tr, df: Optional[DataFrame], part: A.PatternPart,
+                pending: List[A.Expr], payload: _Payload,
+                rank: Callable[[DataFrame], DataFrame]):
+    """StatefulShortestPath (LP:2290): BFS over the (node x NFA-state)
+    product graph (reference ``runtime-util .../PGPathPropagatingBFS``)
+    from the bound start nodes, carrying ``payload`` on every frontier
+    row.
+
+    Termination does not depend on a repetition cap: the visited set over
     (start, node, state) is finite, so ``((x)-[:R]->(y))+`` explores to
-    the graph's true reach where the unrolling Trail path must truncate.
-    Frontier rows carry (start, node, state, count) only — no path arrays
-    — so each level is one join per transition, partitioned on the node
-    id.
+    the graph's true reach.  Each level is one hash join per transition,
+    partitioned on the node id.  Exactness of the visited-set pruning
+    rests on the eligibility guard (translate._nfa_eligible): with every
+    transition directed, type sets pairwise disjoint and no mandatory QPP
+    unrolls, an edge belongs to exactly one transition whose source
+    product state is admitted once per start, so no admitted walk repeats
+    a relationship.
 
-    Relationship uniqueness holds EXACTLY under the eligibility guard
-    (translate._nfa_eligible): with every transition directed, type sets
-    pairwise disjoint, and no mandatory QPP unrolls, an edge belongs to
-    exactly one transition and that transition's source product-state is
-    admitted once per start by the visited set — so no walk the BFS
-    counts can traverse a relationship twice.  Patterns outside the guard
-    use the enumerating Trail path instead."""
+    ``rank`` maps the (__s, __e, __len, *payload) hits to the rows to
+    keep; they are then joined back onto the rowstream with the end node
+    bound.  Returns (rows, start var, end var, nfa)."""
+    from ..cypher.translate import TranslateError
+
     els = list(part.elements)
     a_pat, b_pat = els[0], els[-1]
     df, avar = tr._bind_first_node(df, a_pat, pending)
-    nfa = nfa_compile(tr, els)
+    nfa = nfa_compile(tr, els, core=payload.core)
     closure = nfa.closure_pairs()
-
     max_depth = int(tr.spark.conf.get("neo4j_spark.nfa.maxDepth", "32"))
+    states = sorted({t["to"] for t in nfa.trans} | {0}
+                    | {d for _, d in closure} | {nfa.final})
 
-    def apply_state_sets(rows: DataFrame) -> DataFrame:
+    # every level joins the transition edge frames and state sets
+    for t in nfa.trans:
+        t["edges"] = t["edges"].localCheckpoint(eager=False)
+    for st, ss in list(nfa.state_sets.items()):
+        if ss is not None:
+            nfa.state_sets[st] = ss.localCheckpoint(eager=False)
+    end_set = _nfa_node_set(tr, b_pat)
+    if end_set is not None:
+        end_set = end_set.localCheckpoint(eager=False)
+
+    def advance(rows: DataFrame) -> DataFrame:
+        # epsilon closure, per-level reduce, then each state's node
+        # predicate (a filter on key columns, so it commutes with the
+        # reduce)
+        rows = _union([rows] + [
+            rows.filter(F.col("__st") == a).withColumn("__st", F.lit(b))
+            for a, b in closure])
+        rows = payload.reduce(rows)
         parts = []
-        states_present = sorted(
-            {t["to"] for t in nfa.trans} | {0}
-            | {d for _, d in closure} | {nfa.final})
-        for s in states_present:
+        for s in states:
             sub = rows.filter(F.col("__st") == s)
             ss = nfa.state_sets.get(s)
             if ss is not None:
                 sub = sub.join(ss.withColumnRenamed("nid", "__n"), "__n",
                                "left_semi")
             parts.append(sub)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def eps_close(rows: DataFrame) -> DataFrame:
-        if not closure:
-            return rows
-        extra = []
-        for a, b in closure:
-            extra.append(rows.filter(F.col("__st") == a)
-                         .withColumn("__st", F.lit(b)))
-        out = rows
-        for e in extra:
-            out = out.unionByName(e)
-        return (out.groupBy("__s", "__n", "__st")
-                .agg(F.sum("__c").alias("__c")))
-
-    # pin transition edge frames and state qualifying sets once — every
-    # level joins them
-    for t in nfa.trans:
-        t["edges"] = t["edges"].localCheckpoint(eager=False)
-    for st, ss in list(nfa.state_sets.items()):
-        if ss is not None:
-            nfa.state_sets[st] = ss.localCheckpoint(eager=False)
-
-    # inline start-node predicates ((a:X {p: v} WHERE ...)) seed the BFS
-    # with the filtered set — they are ALSO applied to the rowstream via
-    # pending (idempotent), but seeding small saves every BFS level
-    starts = df.select(avar)
-    if a_pat.props is not None or a_pat.where is not None:
-        starts = tr._filter_node_bound(starts, a_pat, avar)
-    frontier = (starts.select(F.col(avar).getField("_id").alias("__s"))
-                .dropDuplicates()
-                .withColumn("__n", F.col("__s"))
-                .withColumn("__st", F.lit(0))
-                .withColumn("__c", F.lit(1).cast("long")))
-    # localCheckpoint (not persist): the per-level plan references the
-    # previous level several times (per transition + eps copies + the
-    # visited anti-join), so lineage must be TRUNCATED or analysis cost
-    # grows exponentially with depth (same rationale as algorithms.py)
-    frontier = apply_state_sets(eps_close(frontier)) \
-        .localCheckpoint(eager=True)
-    visited = frontier.select("__s", "__n", "__st") \
-        .localCheckpoint(eager=True)
-
-    end_set = _nfa_node_set(tr, b_pat)
-    if end_set is not None:
-        end_set = end_set.localCheckpoint(eager=False)
+        return _union(parts)
 
     def record(rows: DataFrame, depth: int) -> DataFrame:
         hit = rows.filter(F.col("__st") == nfa.final)
@@ -846,69 +881,79 @@ def nfa_shortest(tr, df: Optional[DataFrame], part: A.PatternPart,
             hit = hit.join(end_set.withColumnRenamed("nid", "__n"), "__n",
                            "left_semi")
         return hit.select("__s", F.col("__n").alias("__e"),
-                          F.lit(depth).alias("__len"), "__c")
+                          F.lit(depth).alias("__len"), *payload.cols)
+
+    # inline start-node predicates ((a:X {p: v} WHERE ...)) seed the BFS
+    # with the filtered set — they are ALSO applied to the rowstream via
+    # pending (idempotent), but seeding small saves every BFS level
+    starts = df.select(avar)
+    if a_pat.props is not None or a_pat.where is not None:
+        starts = tr._filter_node_bound(starts, a_pat, avar)
+    seed = (starts.select(F.col(avar).getField("_id").alias("__s"))
+            .dropDuplicates()
+            .select("__s", F.col("__s").alias("__n"),
+                    F.lit(0).alias("__st"), *payload.seed))
+    # localCheckpoint (not persist): the per-level plan references the
+    # previous level several times (per transition + eps copies + the
+    # visited anti-join), so lineage must be TRUNCATED or analysis cost
+    # grows exponentially with depth (same rationale as algorithms.py)
+    frontier = advance(seed).localCheckpoint(eager=True)
+    visited = frontier.select(*_KEY).dropDuplicates() \
+        .localCheckpoint(eager=True)
 
     results = [record(frontier, 0)]
     for depth in range(1, max_depth + 1):
         steps = []
-        for t in nfa.trans:
+        for ti, t in enumerate(nfa.trans):
             part_f = frontier.filter(F.col("__st") == t["frm"]) \
-                             .select("__s", "__n", "__c")
-            steps.append(
-                part_f.join(t["edges"],
-                            part_f["__n"] == t["edges"]["__from"])
-                .select("__s", F.col("__to").alias("__n"),
-                        F.lit(t["to"]).alias("__st"), "__c"))
-        nxt = steps[0]
-        for s in steps[1:]:
-            nxt = nxt.unionByName(s)
-        nxt = (nxt.groupBy("__s", "__n", "__st")
-               .agg(F.sum("__c").alias("__c")))
-        nxt = eps_close(nxt)
-        nxt = apply_state_sets(nxt)
-        nxt = nxt.join(visited, ["__s", "__n", "__st"], "left_anti") \
-                 .localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
+                             .select("__s", "__n", *payload.cols)
+            e = t["edges"]
+            cond = part_f["__n"] == e["__from"]
+            if payload.trail:
+                cond = cond & ~F.array_contains(
+                    _rel_ids(part_f["__rels"]), e["__r"].getField("_id"))
+            steps.append(part_f.join(e, cond).select(
+                "__s", F.col("__to").alias("__n"),
+                F.lit(t["to"]).alias("__st"), *payload.step(ti)))
+        nxt = advance(_union(steps))
+        if not payload.trail:
+            nxt = nxt.join(visited, _KEY, "left_anti")
+        nxt = nxt.localCheckpoint(eager=True)
+        if payload.budget is None:
+            if nxt.isEmpty():
+                break
+        else:
+            n_live = nxt.count()
+            if n_live == 0:
+                break
+            if n_live > payload.budget:
+                raise TranslateError(
+                    f"path enumeration admitted {n_live} live paths at "
+                    f"depth {depth} (> neo4j_spark.nfa.maxFrontierPaths="
+                    f"{payload.budget}); the selector requires enumerating "
+                    f"a combinatorial path set — raise the budget or "
+                    f"bound the pattern (refusing to risk OOM)")
         if depth == max_depth:
-            from ..cypher.translate import TranslateError
-
             raise TranslateError(
                 f"NFA shortest-path search still has an active frontier "
                 f"at depth {max_depth}; raise neo4j_spark.nfa.maxDepth "
                 f"(refusing to silently truncate)")
         results.append(record(nxt, depth))
-        # lazy checkpoint: lineage still truncates, but the union computes
-        # inside the NEXT level's job instead of as its own action
-        visited = visited.unionByName(
-            nxt.select("__s", "__n", "__st")).localCheckpoint(eager=False)
+        if not payload.trail:
+            # lazy checkpoint: lineage still truncates, but the union
+            # computes inside the NEXT level's job instead of its own
+            visited = visited.unionByName(
+                nxt.select(*_KEY)).localCheckpoint(eager=False)
         frontier = nxt
 
-    res = results[0]
-    for r in results[1:]:
-        res = res.unionByName(r)
-
-    sel = part.selector
-    k = part.selector_k or 1
-    if sel in ("allShortest", "shortestGroups"):
-        # one output row per shortest path (multiplicity = walk count)
-        res = res.withColumn(
-            "__dup", F.explode(F.sequence(F.lit(1), F.col("__c")))) \
-            .drop("__dup")
-    res = res.drop("__c")
-
-    # join endpoint structs back onto the rowstream
-    bvar = b_pat.var or tr._anon_var("ne")
-    b_bound = bvar in df.columns
     out = df.join(
-        res.withColumnRenamed("__s", "__nfs"),
+        rank(_union(results)).withColumnRenamed("__s", "__nfs"),
         F.col(avar).getField("_id") == F.col("__nfs")).drop("__nfs")
-    if b_bound:
+    bvar = b_pat.var or tr._anon_var("ne")
+    if bvar in df.columns:
         out = out.filter(
             F.col(bvar).getField("_id") == F.col("__e")).drop("__e")
     else:
-        import dataclasses
-
         # build the end scan from the FULL node pattern (any_labels,
         # neg_labels, label_tree survive) — props/where re-applied on the
         # rowstream via _queue_node_filters below
@@ -921,9 +966,25 @@ def nfa_shortest(tr, df: Optional[DataFrame], part: A.PatternPart,
         tr.kinds[bvar] = "node"
         tr._note_labels(bvar, b_pat.labels)
         tr._queue_node_filters(b_pat, bvar, pending, bound=False)
+    return out, avar, bvar, nfa
+
+
+def nfa_shortest(tr, df: Optional[DataFrame], part: A.PatternPart,
+                 pending: List[A.Expr]) -> DataFrame:
+    """NFA shortest search with the ``count`` payload: only lengths are
+    consumed, so ALL SHORTEST multiplicity is the per-pair walk count and
+    a path variable is a {len} stub."""
+    def rank(res: DataFrame) -> DataFrame:
+        if part.selector in ("allShortest", "shortestGroups"):
+            # one output row per shortest path (multiplicity = walk count)
+            res = res.withColumn(
+                "__dup", F.explode(F.sequence(F.lit(1), F.col("__c")))) \
+                .drop("__dup")
+        return res.drop("__c")
+
+    out, _, _, _ = _nfa_search(tr, df, part, pending, _count_payload(),
+                               rank)
     if part.path_var:
-        # length-only path use (the eligibility guard routes any richer
-        # use to the tracked variant): a {len} stub, like shortest_path's
         out = out.withColumn(
             part.path_var,
             F.struct(F.col("__len").cast("long").alias("len")))
@@ -933,281 +994,50 @@ def nfa_shortest(tr, df: Optional[DataFrame], part: A.PatternPart,
 
 def nfa_shortest_tracked(tr, df: Optional[DataFrame], part: A.PatternPart,
                          pending: List[A.Expr]) -> DataFrame:
-    """Path-propagating StatefulShortestPath: the product-graph BFS of
-    ``nfa_shortest`` with per-row path state, so path variables, group
-    variables and ALL SHORTEST multiplicity project REAL paths instead of
-    falling back to the truncating Trail unroll (reference:
-    ``runtime-util .../PGPathPropagatingBFS``,
-    ``pipes/StatefulShortestPathPipe.scala:41``).
+    """NFA shortest search with the ``track`` payload: path variables,
+    group variables and ALL SHORTEST multiplicity project real paths
+    (reference ``pipes/StatefulShortestPathPipe.scala:41``).
 
-    Frontier rows carry (start, node, state, rels, node-ids, transition
-    ids, path id).  Group variables are re-derived AFTER the search from
-    the transition-id array: a QPP inner variable's occurrences are
-    exactly the steps taken through its transition, so
-    ``x`` in ``(a)((x)-[:R]->(y))+(b)`` is the per-step source node list
-    and ``y`` the destination list — no per-level list columns beyond the
-    three arrays.
+    Group variables are re-derived after the search from the
+    transition-id array: a QPP inner variable's occurrences are exactly
+    the steps taken through its transition, so ``x`` in
+    ``(a)((x)-[:R]->(y))+(b)`` is the per-step source node list and ``y``
+    the destination list."""
+    sel, k = part.selector, part.selector_k or 1
 
-    Exactness: at k == 1 the structural guard (every transition
-    directed, type sets pairwise disjoint, no mandatory unrolls —
-    translate._nfa_eligible) plus visited-once pruning means NO admitted
-    walk can repeat a relationship (reusing an edge would re-enter its
-    source product state), so walks are trails, the pruning loses no
-    reachable product state, and for the ANY selector the deterministic
-    min-path-id representative is a true shortest path.  At k > 1
-    per-state pruning is unsound under relationship-uniqueness (a suffix
-    can conflict with some admitted prefixes but not others), so the
-    search ENUMERATES trails — the step join filters relationships
-    already on the path — and ranks the k winners per (start, end) at
-    the end, with a configurable frontier budget that raises on
-    combinatorial path sets.
-
-    Scale: each level is one hash join per transition partitioned on the
-    node id, plus one map-side-combinable min_by (ANY) or a distinct
-    (ALL).  Path arrays grow with depth — the cost of the query ASKING
-    for path contents; the counting variant remains the fast path when
-    only lengths are consumed."""
-    els = list(part.elements)
-    a_pat, b_pat = els[0], els[-1]
-    df, avar = tr._bind_first_node(df, a_pat, pending)
-    nfa = nfa_compile(tr, els, core=True)
-    closure = nfa.closure_pairs()
-    max_depth = int(tr.spark.conf.get("neo4j_spark.nfa.maxDepth", "32"))
-    sel = part.selector
-    k = part.selector_k or 1
-    # k == 1 (ANY / SHORTEST / ALL SHORTEST): visited-once pruning per
-    # product state is exact — the structural guard makes every admitted
-    # walk a trail (reusing an edge would mean re-entering its source
-    # product state, which the visited set forbids), and min-depth
-    # representatives extend like any other path.
-    #
-    # k > 1 (SHORTEST k / ANY k / SHORTEST k GROUPS): per-state pruning
-    # is UNSOUND under Cypher relationship-uniqueness — a suffix that is
-    # valid for one admitted prefix may share an edge with another, so
-    # a budget of k prefixes per state can starve a real k-th trail
-    # (and without an explicit trail filter the search admits walks like
-    # [e1, e2, e1] on a 2-cycle).  We therefore ENUMERATE: the step join
-    # rejects any relationship already on the path, every distinct trail
-    # per product state survives, and the k winners per (start, end) are
-    # ranked at the end.  Termination is inherent (trails cannot repeat
-    # an edge); a configurable frontier budget fails loudly on
-    # combinatorial path sets instead of OOMing (also guards the
-    # ALL SHORTEST keep_all enumeration).
-    groups_mode = sel in ("allShortest", "shortestGroups")
-    keep_all = groups_mode and k == 1
-    enumerate_mode = keep_all or k > 1
-    max_paths = int(tr.spark.conf.get(
-        "neo4j_spark.nfa.maxFrontierPaths", "1000000"))
-    path_cols = ["__rels", "__ns", "__trs", "__pid"]
-
-    def apply_state_sets(rows: DataFrame) -> DataFrame:
-        parts = []
-        states_present = sorted(
-            {t["to"] for t in nfa.trans} | {0}
-            | {d for _, d in closure} | {nfa.final})
-        for s in states_present:
-            sub = rows.filter(F.col("__st") == s)
-            ss = nfa.state_sets.get(s)
-            if ss is not None:
-                sub = sub.join(ss.withColumnRenamed("nid", "__n"), "__n",
-                               "left_semi")
-            parts.append(sub)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def eps_close(rows: DataFrame) -> DataFrame:
-        if not closure:
-            return rows
-        out = rows
-        for a, b in closure:
-            out = out.unionByName(
-                rows.filter(F.col("__st") == a)
-                    .withColumn("__st", F.lit(b)))
-        return out
-
-    def reduce_paths(rows: DataFrame) -> DataFrame:
-        if enumerate_mode:
-            # every distinct trail survives (path id = the rel-id
-            # sequence); eps copies of the same path dedup here
-            return rows.dropDuplicates(["__s", "__n", "__st", "__pid"])
-        # ANY: ONE deterministic representative per product state — the
-        # lexicographically-least path id.  min_by is a plain aggregate:
-        # partial (map-side) combine shrinks each partition first.
-        return (rows.groupBy("__s", "__n", "__st")
-                .agg(F.min_by(F.struct(*path_cols),
-                              F.col("__pid")).alias("__p"))
-                .select("__s", "__n", "__st",
-                        *[F.col(f"__p.{c}").alias(c) for c in path_cols]))
-
-    for t in nfa.trans:
-        t["edges"] = t["edges"].localCheckpoint(eager=False)
-    for st, ss in list(nfa.state_sets.items()):
-        if ss is not None:
-            nfa.state_sets[st] = ss.localCheckpoint(eager=False)
-
-    starts = df.select(avar)
-    if a_pat.props is not None or a_pat.where is not None:
-        starts = tr._filter_node_bound(starts, a_pat, avar)
-    frontier = (starts.select(F.col(avar).getField("_id").alias("__s"))
-                .dropDuplicates()
-                .withColumn("__n", F.col("__s"))
-                .withColumn("__st", F.lit(0))
-                .withColumn("__rels", F.array().cast(REL_CORE_T))
-                .withColumn("__ns", F.array().cast("array<bigint>"))
-                .withColumn("__trs", F.array().cast("array<int>"))
-                .withColumn("__pid", F.lit("")))
-    frontier = reduce_paths(apply_state_sets(eps_close(frontier))) \
-        .localCheckpoint(eager=True)
-    visited = frontier.select("__s", "__n", "__st").dropDuplicates() \
-        .localCheckpoint(eager=True)
-
-    end_set = _nfa_node_set(tr, b_pat)
-    if end_set is not None:
-        end_set = end_set.localCheckpoint(eager=False)
-
-    def record(rows: DataFrame, depth: int) -> DataFrame:
-        hit = rows.filter(F.col("__st") == nfa.final)
-        if end_set is not None:
-            hit = hit.join(end_set.withColumnRenamed("nid", "__n"), "__n",
-                           "left_semi")
-        return hit.select("__s", F.col("__n").alias("__e"),
-                          F.lit(depth).alias("__len"), *path_cols)
-
-    results = [record(frontier, 0)]
-    for depth in range(1, max_depth + 1):
-        steps = []
-        for ti, t in enumerate(nfa.trans):
-            part_f = frontier.filter(F.col("__st") == t["frm"]) \
-                             .select("__s", "__n", *path_cols)
-            e = t["edges"]
-            cond = part_f["__n"] == e["__from"]
-            if k > 1:
-                # Cypher relationship-uniqueness: a trail never reuses
-                # a relationship (at k == 1 the visited set already
-                # forbids re-entering an edge's source product state)
-                cond = cond & ~F.array_contains(
-                    F.transform(part_f["__rels"],
-                                lambda r: r.getField("_id")),
-                    e["__r"].getField("_id"))
-            steps.append(
-                part_f.join(e, cond)
-                .select(
-                    "__s", F.col("__to").alias("__n"),
-                    F.lit(t["to"]).alias("__st"),
-                    F.array_append(F.col("__rels"),
-                                   F.col("__r")).alias("__rels"),
-                    F.array_append(F.col("__ns"),
-                                   F.col("__to")).alias("__ns"),
-                    F.array_append(F.col("__trs"),
-                                   F.lit(ti)).alias("__trs"),
-                    F.concat(
-                        F.col("__pid"), F.lit(","),
-                        F.format_string(
-                            "%019d",
-                            F.col("__r").getField("_id"))).alias("__pid")))
-        nxt = steps[0]
-        for s in steps[1:]:
-            nxt = nxt.unionByName(s)
-        nxt = eps_close(nxt)
-        nxt = apply_state_sets(nxt)
+    def rank(res: DataFrame) -> DataFrame:
+        if sel in ("allShortest", "shortestGroups"):
+            if k == 1:
+                # the visited set already kept only min-depth paths
+                return res
+            # SHORTEST k GROUPS: every path in the k shortest length
+            # groups per (start, end)
+            wg = W.partitionBy("__s", "__e").orderBy("__len")
+            return (res.withColumn("__rk", F.dense_rank().over(wg))
+                    .filter(F.col("__rk") <= k).drop("__rk"))
         if k == 1:
-            nxt = nxt.join(visited, ["__s", "__n", "__st"], "left_anti")
-            nxt = reduce_paths(nxt)
-        else:
-            # trail enumeration: the step join already rejected reused
-            # relationships; every distinct trail per state survives
-            nxt = nxt.dropDuplicates(["__s", "__n", "__st", "__pid"])
-        nxt = nxt.localCheckpoint(eager=True)
-        if enumerate_mode:
-            n_live = nxt.count()
-            if n_live == 0:
-                break
-            if n_live > max_paths:
-                from ..cypher.translate import TranslateError
-
-                raise TranslateError(
-                    f"path enumeration admitted {n_live} live paths at "
-                    f"depth {depth} (> neo4j_spark.nfa.maxFrontierPaths="
-                    f"{max_paths}); the selector requires enumerating "
-                    f"a combinatorial path set — raise the budget or "
-                    f"bound the pattern (refusing to risk OOM)")
-        elif nxt.isEmpty():
-            break
-        if depth == max_depth:
-            from ..cypher.translate import TranslateError
-
-            raise TranslateError(
-                f"NFA shortest-path search still has an active frontier "
-                f"at depth {max_depth}; raise neo4j_spark.nfa.maxDepth "
-                f"(refusing to silently truncate)")
-        results.append(record(nxt, depth))
-        if k == 1:
-            visited = visited.unionByName(
-                nxt.select("__s", "__n", "__st")).localCheckpoint(eager=False)
-        frontier = nxt
-
-    res = results[0]
-    for r in results[1:]:
-        res = res.unionByName(r)
-    if groups_mode and k > 1:
-        # SHORTEST k GROUPS: every path in the k shortest length-groups
-        # per (start, end) — dense_rank over the enumerated trail set
-        wg = W.partitionBy("__s", "__e").orderBy("__len")
-        res = (res.withColumn("__rk", F.dense_rank().over(wg))
-               .filter(F.col("__rk") <= k).drop("__rk"))
-    elif groups_mode:
-        # ALL SHORTEST (k=1): visited-once pruning already kept only
-        # min-depth paths per product state
-        pass
-    elif k == 1:
-        # ONE row per (start, end) pair — deterministic representative
-        res = (res.groupBy("__s", "__e")
-               .agg(F.min_by(F.struct("__len", *path_cols),
-                             F.col("__pid")).alias("__p"))
-               .select("__s", "__e", F.col("__p.__len").alias("__len"),
-                       *[F.col(f"__p.{c}").alias(c) for c in path_cols]))
-    else:
-        # SHORTEST k / ANY k: the k shortest trails per (start, end)
-        # from the enumerated set, deterministic by (len, pid)
+            # ONE deterministic representative per (start, end)
+            return (res.groupBy("__s", "__e")
+                    .agg(F.min_by(F.struct("__len", *_PATH),
+                                  F.col("__pid")).alias("__p"))
+                    .select("__s", "__e", F.col("__p.__len").alias("__len"),
+                            *[F.col(f"__p.{c}").alias(c) for c in _PATH]))
+        # SHORTEST k / ANY k: the k shortest trails, by (len, pid)
         wk = W.partitionBy("__s", "__e").orderBy("__len", "__pid")
-        res = (res.withColumn("__rk", F.row_number().over(wk))
-               .filter(F.col("__rk") <= k).drop("__rk"))
+        return (res.withColumn("__rk", F.row_number().over(wk))
+                .filter(F.col("__rk") <= k).drop("__rk"))
 
-    out = df.join(
-        res.withColumnRenamed("__s", "__nfs"),
-        F.col(avar).getField("_id") == F.col("__nfs")).drop("__nfs")
-    bvar = b_pat.var or tr._anon_var("ne")
-    b_bound = bvar in df.columns
-    if b_bound:
-        out = out.filter(
-            F.col(bvar).getField("_id") == F.col("__e")).drop("__e")
-    else:
-        import dataclasses
+    out, avar, bvar, nfa = _nfa_search(tr, df, part, pending,
+                                       _track_payload(tr, part), rank)
 
-        end_scan = tr._node_scan(
-            dataclasses.replace(b_pat, var=bvar, props=None, where=None),
-            bvar)
-        out = out.join(
-            end_scan,
-            F.col("__e") == F.col(bvar).getField("_id")).drop("__e")
-        tr.kinds[bvar] = "node"
-        tr._note_labels(bvar, b_pat.labels)
-        tr._queue_node_filters(b_pat, bvar, pending, bound=False)
-
-    # ---- project group variables from the transition-id array ----------
     dstmap, srcmap, relmap = {}, {}, {}
     for ti, t in enumerate(nfa.trans):
-        if t.get("dst_var"):
-            dstmap.setdefault(t["dst_var"], []).append(ti)
-        if t.get("src_var"):
-            srcmap.setdefault(t["src_var"], []).append(ti)
-        if t.get("rel_var"):
-            relmap.setdefault(t["rel_var"], []).append(ti)
+        for m, key in ((dstmap, "dst_var"), (srcmap, "src_var"),
+                       (relmap, "rel_var")):
+            if t.get(key):
+                m.setdefault(t[key], []).append(ti)
 
-    start_id = F.col(avar).getField("_id")
-    allns = F.concat(F.array(start_id), F.col("__ns"))
+    allns = F.concat(F.array(F.col(avar).getField("_id")), F.col("__ns"))
     idxs = F.when(F.size(F.col("__trs")) == 0,
                   F.array().cast("array<integer>")) \
             .otherwise(F.sequence(F.lit(0), F.size(F.col("__trs")) - 1))
@@ -1216,34 +1046,28 @@ def nfa_shortest_tracked(tr, df: Optional[DataFrame], part: A.PatternPart,
         return F.filter(
             idxs, lambda i: F.element_at(F.col("__trs"), i + 1).isin(tis))
 
+    def node_stubs(arr: Column, tis) -> Column:
+        return F.transform(steps_for(tis), lambda i: F.struct(
+            F.element_at(arr, i + 1).alias("_id")))
+
     bound_vars = {avar, bvar}
     for v in list(dstmap) + list(srcmap) + list(relmap):
-        if v in bound_vars or v in out.columns:
-            continue
-        if tr._var_single_use(v):
-            continue  # pattern-only variable: no binding needed
+        if v in bound_vars or v in out.columns or tr._var_single_use(v):
+            continue  # bound already, or a pattern-only variable
         bound_vars.add(v)
         if v in relmap:
-            lst = F.transform(steps_for(relmap[v]),
+            ids = F.transform(steps_for(relmap[v]),
                               lambda i: F.element_at(F.col("__rels"), i + 1))
-            out = out.withColumn(v, lst)
-            out = _enrich_rel_list(tr, out, v)
+            scan = tr._rel_scan(A.RelPat(None), "__gv").drop("__from", "__to")
             tr.kinds[v] = "rellist"
-        elif v in dstmap:
-            lst = F.transform(
-                steps_for(dstmap[v]),
-                lambda i: F.struct(
-                    F.element_at(F.col("__ns"), i + 1).alias("_id")))
-            out = out.withColumn(v, lst)
-            out = _enrich_node_list(tr, out, v)
+        else:
+            # a destination variable, or the iteration's entry node
+            ids = (node_stubs(F.col("__ns"), dstmap[v]) if v in dstmap
+                   else node_stubs(allns, srcmap[v]))
+            scan = tr._node_scan(A.NodePat(None), "__gv")
             tr.kinds[v] = "nodelist"
-        else:  # src-only (the iteration's entry node)
-            lst = F.transform(
-                steps_for(srcmap[v]),
-                lambda i: F.struct(F.element_at(allns, i + 1).alias("_id")))
-            out = out.withColumn(v, lst)
-            out = _enrich_node_list(tr, out, v)
-            tr.kinds[v] = "nodelist"
+        out = hydrate(tr, out, ids, scan, "__gv", v)
+        out = out.withColumn(v, F.filter(F.col(v), lambda x: x.isNotNull()))
 
     if part.path_var:
         pvar = part.path_var
@@ -1252,7 +1076,7 @@ def nfa_shortest_tracked(tr, df: Optional[DataFrame], part: A.PatternPart,
             pvar, F.struct(nodes_arr.alias("nodes"),
                            F.col("__rels").alias("rels")))
         tr.kinds[pvar] = "path"
-    out = out.drop(*path_cols, "__len")
+    out = out.drop(*_PATH, "__len")
     if part.path_var:
         node_rich, rel_rich = tr._path_use_kinds(part.path_var)
         if rel_rich:
@@ -1262,52 +1086,26 @@ def nfa_shortest_tracked(tr, df: Optional[DataFrame], part: A.PatternPart,
     return out
 
 
-def _enrich_node_list(tr, df: DataFrame, col: str) -> DataFrame:
-    """Replace an array of {_id} node stubs with full node structs (the
-    group-variable analog of _resolve_path_nodes): one posexplode + join
-    + positional regroup, only run when the statement reads the list."""
-    rid = tr._anon_var("gnrow")
-    df = _pin(df.withColumn(rid, F.monotonically_increasing_id()))
-    ex = df.select(
-        F.col(rid),
-        F.posexplode_outer(F.col(col)).alias("__pos", "__gid"))
-    nscan = tr._node_scan(A.NodePat(None), "__gnode")
-    joined = ex.join(
-        nscan,
-        F.col("__gid").getField("_id") == F.col("__gnode").getField("_id"),
-        "left")
-    agg = joined.groupBy(rid).agg(
-        F.filter(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("__pos").alias("o"),
-                             F.col("__gnode").alias("n")))),
-                lambda x: x.getField("n")),
-            lambda n: n.isNotNull()).alias("__gnodes"))
-    return df.join(agg, rid).withColumn(col, F.col("__gnodes")) \
-             .drop(rid, "__gnodes")
+def hydrate(tr, df: DataFrame, ids: Column, scan: DataFrame, var: str,
+            out: str) -> DataFrame:
+    """Add array column ``out``: the entries of ``ids`` (structs carrying
+    ``_id``) replaced, in order, by the ``var`` struct of ``scan`` with
+    the same id — null where ``scan`` has none.  Empty or null ``ids``
+    give an empty list.
 
-
-def _enrich_rel_list(tr, df: DataFrame, col: str) -> DataFrame:
-    """Replace an array of rel-core structs with full property-carrying
-    rel structs (the group-variable analog of _resolve_path_rels)."""
-    rid = tr._anon_var("grrow")
+    One pass for the whole column: pin a row id (both sides of the
+    self-join must see the same nondeterministic assignment), posexplode,
+    left-join ``scan``, regroup by position."""
+    rid = tr._anon_var("hrow")
     df = _pin(df.withColumn(rid, F.monotonically_increasing_id()))
-    ex = df.select(
-        F.col(rid),
-        F.posexplode_outer(F.col(col)).alias("__pos", "__gr"))
-    rscan = tr._rel_scan(A.RelPat(None), "__grel").drop("__from", "__to")
+    ex = df.select(rid, F.posexplode_outer(ids).alias("__hpos", "__hid"))
     joined = ex.join(
-        rscan,
-        F.col("__gr").getField("_id") == F.col("__grel").getField("_id"),
+        scan, F.col("__hid").getField("_id") == F.col(var).getField("_id"),
         "left")
-    agg = joined.groupBy(rid).agg(
-        F.filter(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("__pos").alias("o"),
-                             F.col("__grel").alias("r")))),
-                lambda x: x.getField("r")),
-            lambda r: r.isNotNull()).alias("__grels"))
-    return df.join(agg, rid).withColumn(col, F.col("__grels")) \
-             .drop(rid, "__grels")
+    # collect_list skips the null entry an empty array explodes to
+    agg = joined.groupBy(rid).agg(F.transform(
+        F.array_sort(F.collect_list(F.when(
+            F.col("__hpos").isNotNull(),
+            F.struct(F.col("__hpos").alias("o"), F.col(var).alias("v"))))),
+        lambda x: x.getField("v")).alias(out))
+    return df.join(agg, rid).drop(rid)

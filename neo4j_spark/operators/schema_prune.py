@@ -168,38 +168,6 @@ def level_all_sets(
     return (out, lefts, rights) if pruned else None
 
 
-def maybe_shared(sets):
-    """A/B switch: NEO4J_SPARK_PRUNE_SHARED=1 -> union-shared scans."""
-    if os.environ.get("NEO4J_SPARK_PRUNE_SHARED", "0") == "1":
-        return shared_sets(sets)
-    return sets
-
-
-def maybe_shared_all(all_sets):
-    """(sets, lefts, rights) variant of :func:`maybe_shared`.  Under the
-    shared-scan A/B flag the per-level label constraints are dropped —
-    sharing wants ONE scan reused by every level, which per-level shard
-    pruning would defeat."""
-    if all_sets is None:
-        return None, None, None
-    sets, lefts, rights = all_sets
-    if os.environ.get("NEO4J_SPARK_PRUNE_SHARED", "0") == "1":
-        return shared_sets(sets), None, None
-    return sets, lefts, rights
-
-
-def shared_sets(sets: Optional[List[FrozenSet[str]]]
-                ) -> Optional[List[FrozenSet[str]]]:
-    """Collapse per-level sets to one shared union (empty levels stay
-    empty).  Every non-dead level then joins the SAME scan DataFrame, so
-    Spark reuses a single shuffle exchange across all levels — trading
-    per-level minimality for scan/exchange reuse."""
-    if sets is None:
-        return None
-    u: FrozenSet[str] = frozenset().union(*sets)
-    return [u if s else frozenset() for s in sets]
-
-
 def flipped(rp: "A.RelPat") -> "A.RelPat":
     """The same rel pattern traversed in the opposite direction (for
     backward BFS sides)."""

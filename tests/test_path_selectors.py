@@ -14,9 +14,9 @@ from neo4j_spark.api import cypher
 
 import pytest
 
-# conformance tranche: excluded from the default (core) run so the
-# driver's verify window can finish; run with `pytest -m acceptance`
-pytestmark = pytest.mark.acceptance
+# conformance tranche: everything here is marked `acceptance` (excluded
+# from the default core run; run with `pytest -m acceptance`) except the
+# two classes that pin the NFA search's `count` and `track` payloads
 
 
 def rows(df):
@@ -27,6 +27,7 @@ def _count(spark, g, q):
     return cypher(spark, q, g).collect()
 
 
+@pytest.mark.acceptance
 def test_shortest_one_per_pair(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = SHORTEST 1 (a:N {name: 'a'})-[*1..2]->(d:N {name: 'd'})
@@ -35,6 +36,7 @@ def test_shortest_one_per_pair(spark, diamond_graph):
     assert [r["len"] for r in out] == [2]
 
 
+@pytest.mark.acceptance
 def test_shortest_k_two(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = SHORTEST 2 (a:N {name: 'a'})-[*1..2]->(d:N {name: 'd'})
@@ -43,6 +45,7 @@ def test_shortest_k_two(spark, diamond_graph):
     assert out[0]["n"] == 2
 
 
+@pytest.mark.acceptance
 def test_shortest_groups_all_min_length(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = SHORTEST 1 GROUPS (a:N {name: 'a'})-[*1..2]->(d:N {name: 'd'})
@@ -51,6 +54,7 @@ def test_shortest_groups_all_min_length(spark, diamond_graph):
     assert out[0]["n"] == 3  # both parallel a-b-d walks + a-c-d
 
 
+@pytest.mark.acceptance
 def test_shortest_groups_two_length_groups(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = SHORTEST 2 GROUPS (a:N {name: 'a'})-[*1..2]->(b:N {name: 'b'})
@@ -60,6 +64,7 @@ def test_shortest_groups_two_length_groups(spark, diamond_graph):
     assert [(r["len"], r["n"]) for r in out] == [(1, 2), (2, 2)]
 
 
+@pytest.mark.acceptance
 def test_shortest_k_spans_lengths(spark, diamond_graph):
     # 2 one-hop paths + (self-loop) two-hop paths; SHORTEST 3 takes 3
     out = _count(spark, diamond_graph, """
@@ -70,6 +75,7 @@ def test_shortest_k_spans_lengths(spark, diamond_graph):
     assert [(r["len"], r["n"]) for r in out] == [(1, 2), (2, 1)]
 
 
+@pytest.mark.acceptance
 def test_any_k(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = ANY 2 (a:N {name: 'a'})-[*1..2]->(d:N {name: 'd'})
@@ -78,6 +84,7 @@ def test_any_k(spark, diamond_graph):
     assert out[0]["n"] == 2
 
 
+@pytest.mark.acceptance
 def test_any_shortest_fixed_pattern(spark, diamond_graph):
     # non-var-length pattern with a selector: one of the parallel edges
     out = _count(spark, diamond_graph, """
@@ -87,6 +94,7 @@ def test_any_shortest_fixed_pattern(spark, diamond_graph):
     assert out[0]["n"] == 1
 
 
+@pytest.mark.acceptance
 def test_selector_single_node_pattern(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH p = SHORTEST 1 (n:N) RETURN count(*) AS n
@@ -94,6 +102,7 @@ def test_selector_single_node_pattern(spark, diamond_graph):
     assert out[0]["n"] == 4
 
 
+@pytest.mark.acceptance
 def test_all_selector_is_default(spark, diamond_graph):
     out = _count(spark, diamond_graph, """
         MATCH ALL (a:N {name: 'a'})-[r:E]->(b:N {name: 'b'})
@@ -102,6 +111,7 @@ def test_all_selector_is_default(spark, diamond_graph):
     assert out[0]["n"] == 2
 
 
+@pytest.mark.acceptance
 def test_selector_respects_internal_where(spark, diamond_graph):
     # predicate inside the pattern constrains the search BEFORE selection:
     # forbid the b-route; the shortest surviving a->d path is via c
@@ -185,6 +195,7 @@ class TestNFAStatefulShortest:
         assert out.collect()[0]["n"] == 3
 
 
+@pytest.mark.acceptance
 def test_shortest_path_expr_unbound_endpoints(spark, tpch_graph):
     """shortestPath() value with endpoints bound by the expression's own
     pattern (NestedPlanExpression GetValue): one deterministic path per
@@ -209,6 +220,7 @@ def test_shortest_path_expr_unbound_endpoints(spark, tpch_graph):
     assert [(r["k"], r["l"]) for r in out] == [(0, 1), (1, 1), (2, 1)]
 
 
+@pytest.mark.acceptance
 class TestNFALabelExpressions:
     """Round-3 regressions: label expressions on NFA end/inner nodes and
     zero-repetition semantics with inner predicates (ADVICE r2)."""
@@ -266,6 +278,7 @@ class TestNFALabelExpressions:
         assert [r["bx"] for r in out] == [1]
 
 
+@pytest.mark.acceptance
 def test_is_typed_tagged_temporal_ranks(spark, chain_graph):
     # IS :: on tagged values: DURATION / ZONED TIME / LOCAL TIME ranks
     # (ADVICE r2 — the rank table previously omitted them)
@@ -331,6 +344,7 @@ class TestNFAPathPropagation:
                                                  "IN_REGION")]
 
 
+@pytest.mark.acceptance
 class TestUnboundedExactOrRaise:
     """Unbounded quantifiers outside the NFA guard either enumerate to
     the graph's true reach (dynamic Trail unroll) or raise — never
@@ -396,6 +410,7 @@ class TestUnboundedExactOrRaise:
                    "RETURN count(*) AS n")
 
 
+@pytest.mark.acceptance
 class TestShortestPathInWhere:
     """shortestPath() as a value expression in predicate position
     (NestedPlanExpression via the WHERE lowering path)."""
@@ -427,6 +442,7 @@ class TestShortestPathInWhere:
         assert got == [(1,)]
 
 
+@pytest.mark.acceptance
 class TestNFAKBudgeted:
     """SHORTEST k / SHORTEST k GROUPS / ANY k over UNBOUNDED quantifiers
     route to the path-propagating NFA (nfa_shortest_tracked), which for
@@ -504,6 +520,7 @@ class TestNFAKBudgeted:
         assert got[0] == (1, [1, 4])
         assert got[1][0] == 2 and got[1][1][0] == 1 and got[1][1][2] == 4
 
+@pytest.mark.acceptance
 class TestNFATrailUniqueness:
     """Cypher relationship-uniqueness under k>1 selectors on CYCLIC
     graphs: a walk may never reuse a relationship (reference:
@@ -603,6 +620,7 @@ class TestNFATrailUniqueness:
             spark.conf.unset("neo4j_spark.nfa.maxFrontierPaths")
 
 
+@pytest.mark.acceptance
 class TestDiamondLatticeExplosion:
     """Adversarial scale fixture: a chain of D stacked diamonds admits
     2^D distinct shortest trails between the endpoints.  k>1 selectors

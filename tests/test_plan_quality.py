@@ -169,6 +169,22 @@ def test_translate_has_no_driver_collect():
     assert "dropDuplicates().limit(cap + 1)" in ctx, ctx
 
 
+def test_no_new_env_switches():
+    """Product code reads only the two known NEO4J_SPARK_* environment
+    switches: SCHEMA_PRUNE (the unpruned reference run of
+    test_pruned_equals_unpruned) and WIDEN_SPLITS.  A behaviour choice
+    belongs to the query or the plan, not to an A/B switch."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neo4j_spark"
+    read = re.compile(r"(?:environ(?:\.get)?\s*[\[(]|getenv\s*\()\s*"
+                      r"[\"']NEO4J_SPARK_(\w+)")
+    found = {m for f in root.rglob("*.py")
+             for m in read.findall(f.read_text())}
+    assert found == {"SCHEMA_PRUNE", "WIDEN_SPLITS"}
+
+
 class TestSharedBaseFusion:
     """CONTAINS and SUPPLIED_BY are row images of one lineitem table
     (FIXTURES.md): with neo4j_spark.scan.fuseSharedBases=true a

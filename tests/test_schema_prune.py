@@ -14,8 +14,7 @@ import pytest
 
 from neo4j_spark.api import cypher
 from neo4j_spark.cypher import ast as A
-from neo4j_spark.operators.schema_prune import (flipped, level_type_sets,
-                                                shared_sets)
+from neo4j_spark.operators.schema_prune import flipped, level_type_sets
 
 
 def _rp(direction="out", min_len=1, max_len=3, types=()):
@@ -77,11 +76,6 @@ class TestClosure:
                                    ["Customer"], ["Region"], 3) is None
         finally:
             os.environ["NEO4J_SPARK_SCHEMA_PRUNE"] = "1"
-
-    def test_shared_sets_union(self):
-        sets = [frozenset({"A"}), frozenset({"B"}), frozenset()]
-        assert shared_sets(sets) == [frozenset({"A", "B"}),
-                                     frozenset({"A", "B"}), frozenset()]
 
 
 QUERIES = [
