@@ -75,8 +75,6 @@ def cypher(
         # SchemaLogicalPlan / ShowCommandLogicalPlan path (SURVEY §2.10)
         return run_schema_command(spark, graph, body)
     ast = parse(body)
-    if graph is not None:
-        graph.begin_scan_tracking()  # statement-scoped shared-base fusion
     if mode == "EXPLAIN":
         # EXPLAIN returns the query's result COLUMNS with zero rows and
         # performs NO side effects (ExplainAcceptance.feature) — writes
@@ -185,5 +183,4 @@ class CypherSession:
         if ast is None:
             ast = parse(query)
             self._ast_cache[query] = ast
-        self.graph.begin_scan_tracking()
         return Translator(self.spark, self.graph, params or {}).translate(ast)

@@ -4,13 +4,30 @@ Shape mirrors the reference front-end's AST (reference:
 ``community/cypher/front-end/ast/src/main/scala/org/neo4j/cypher/internal/ast/Clause.scala``
 — Match:593, With:1507, Return:1541, Unwind:1216, SubqueryCall:1677) and its
 expression module (``front-end/expressions``), trimmed to the analytics
-surface this engine executes.  Dataclasses only — no behavior.
+surface this engine executes.
+
+Traversal contract (the reference's ``Foldable``/``Rewritable``): this
+module is the only place that looks at a node's dataclass fields.
+
+- :func:`children` yields a node's direct AST children: every dataclass
+  value in its fields, flattened through lists and tuples at any depth —
+  so ``Case.whens`` pairs, ``MapLit.items``, ``MapProjection`` ``("kv",
+  key, expr)`` items and pattern property maps are all reached.  Strings
+  (``var``, ``path_var``, label and type names) are not children; the
+  string-tuple label/type algebra trees contribute only the dynamic
+  ``$(expr)`` labels they hold.
+- :func:`walk` visits a subtree in pre-order; ``skip(node)`` true yields
+  the node but not its subtree.
+- :func:`map_children` rebuilds a node from ``fn`` applied to each child
+  with ``dataclasses.replace``, and returns the SAME object when no child
+  changed, so rewriters keep identity on untouched subtrees.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
 
 # --------------------------------------------------------------------------
 # Expressions
@@ -469,3 +486,61 @@ class SingleQuery:
 class UnionQuery:
     queries: List[SingleQuery]
     all: bool = False
+
+
+# --------------------------------------------------------------------------
+# Traversal
+# --------------------------------------------------------------------------
+
+
+def _is_node(v) -> bool:
+    return dataclasses.is_dataclass(v) and not isinstance(v, type)
+
+
+def _nodes(v) -> Iterator[Any]:
+    """The AST nodes in a field value, flattening lists/tuples."""
+    if isinstance(v, (list, tuple)):
+        for x in v:
+            yield from _nodes(x)
+    elif _is_node(v):
+        yield v
+
+
+def children(node) -> Iterator[Any]:
+    """Direct AST children of ``node`` in field order."""
+    for f in dataclasses.fields(node):
+        yield from _nodes(getattr(node, f.name))
+
+
+def walk(root, skip: Optional[Callable[[Any], bool]] = None
+         ) -> Iterator[Any]:
+    """Pre-order over every node under ``root`` (a node, or a list/tuple
+    of nodes); the subtree of a node with ``skip(node)`` true is not
+    entered."""
+    stack = list(_nodes(root))[::-1]
+    while stack:
+        node = stack.pop()
+        yield node
+        if skip is None or not skip(node):
+            stack.extend(list(children(node))[::-1])
+
+
+def _map_value(v, fn):
+    if isinstance(v, (list, tuple)):
+        new = [_map_value(x, fn) for x in v]
+        if all(a is b for a, b in zip(new, v)):
+            return v
+        return type(v)(new)
+    return fn(v) if _is_node(v) else v
+
+
+def map_children(node, fn: Callable[[Any], Any]):
+    """``node`` with every child ``c`` replaced by ``fn(c)``; ``node``
+    itself when every ``fn(c) is c``."""
+    changes = {}
+    for f in dataclasses.fields(node):
+        v = getattr(node, f.name)
+        nv = _map_value(v, fn)
+        if nv is not v:
+            changes[f.name] = nv
+    return dataclasses.replace(node, **changes) if changes else node

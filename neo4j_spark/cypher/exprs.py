@@ -14,7 +14,7 @@ Carries the cross-type semantics catalogued in SURVEY §1.2/§2.8 (reference:
 
 from __future__ import annotations
 
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -1757,22 +1757,5 @@ def contains_aggregate(e: A.Expr) -> bool:
         return True
     if isinstance(e, A.Func) and is_agg_fn(e.name):
         return True
-    for child in expr_children(e):
-        if contains_aggregate(child):
-            return True
-    return False
-
-
-def expr_children(e: A.Expr) -> List[A.Expr]:
-    out: List[A.Expr] = []
-    for f in getattr(e, "__dataclass_fields__", {}):
-        v = getattr(e, f)
-        if isinstance(v, A.Expr):
-            out.append(v)
-        elif isinstance(v, list):
-            for x in v:
-                if isinstance(x, A.Expr):
-                    out.append(x)
-                elif isinstance(x, tuple):
-                    out.extend(y for y in x if isinstance(y, A.Expr))
-    return out
+    return any(isinstance(c, A.Expr) and contains_aggregate(c)
+               for c in A.children(e))

@@ -30,8 +30,7 @@ from typing import Any, Dict, List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from . import ast as A
-from .exprs import (AGG_FNS, ExprCompiler, contains_aggregate, expr_children,
-                    is_agg_fn)
+from .exprs import AGG_FNS, ExprCompiler, contains_aggregate, is_agg_fn
 from ..graph import PropertyGraph, unesc_prop as _unesc_prop
 
 NODE_META = ("id", "labels")
@@ -49,61 +48,62 @@ def _rel_core(col: Column) -> Column:
     )
 
 
-def _collect_var_names(node) -> set:
-    """All variable names referenced or bound anywhere in an AST subtree —
-    the implicit-correlation candidates of a subquery expression."""
-    import dataclasses
-
+def _collect_var_names(node, binders: bool = True) -> set:
+    """Every variable name an AST subtree (or list/tuple of subtrees)
+    references; with ``binders`` also every name it binds (``var`` /
+    ``path_var`` fields) — the implicit-correlation candidates of a
+    subquery expression."""
     names: set = set()
-
-    def walk(n) -> None:
+    for n in A.walk(node):
         if isinstance(n, A.Var):
             names.add(n.name)
-        if dataclasses.is_dataclass(n):
-            for f in dataclasses.fields(n):
-                v = getattr(n, f.name)
-                if f.name in ("var", "path_var") and isinstance(v, str):
-                    names.add(v)
-                if dataclasses.is_dataclass(v):
-                    walk(v)
-                elif isinstance(v, (list, tuple)):
-                    for x in v:
-                        if dataclasses.is_dataclass(x):
-                            walk(x)
-
-    if isinstance(node, A.UnionQuery):
-        for q in node.queries:
-            walk(q)
-    else:
-        walk(node)
+        elif binders:
+            names.update(_bound_names(n))
     return names
 
 
-def _walk_expr_list(walk, df, v):
-    """Apply a (df, expr) -> (df, expr) walker to every Expr inside a list,
-    including tuple elements (Case.whens pairs, MapLit items), threading
-    the DataFrame through."""
-    nl = []
-    changed = False
-    for x in v:
-        if isinstance(x, A.Expr):
-            df, nx = walk(df, x)
-        elif isinstance(x, tuple) and any(isinstance(y, A.Expr) for y in x):
-            parts = []
-            tchanged = False
-            for y in x:
-                if isinstance(y, A.Expr):
-                    df, ny = walk(df, y)
-                    tchanged = tchanged or (ny is not y)
-                    parts.append(ny)
-                else:
-                    parts.append(y)
-            nx = tuple(parts) if tchanged else x
-        else:
-            nx = x
-        changed = changed or (nx is not x)
-        nl.append(nx)
-    return df, nl, changed
+def _bound_names(n) -> List[str]:
+    """The names an AST node binds: its ``var`` / ``path_var`` strings."""
+    return [v for v in (getattr(n, "var", None), getattr(n, "path_var", None))
+            if isinstance(v, str)]
+
+
+def _no_node_filters(np: A.NodePat) -> bool:
+    return (np.label_tree is None and not np.neg_labels
+            and not np.any_labels and not np.req_any_label
+            and not np.req_no_label and np.props is None
+            and np.where is None)
+
+
+def _bare_node(np: A.NodePat) -> bool:
+    """A node pattern with no label, property or WHERE constraint."""
+    return not np.labels and _no_node_filters(np)
+
+
+def _single_label_node(np: A.NodePat) -> bool:
+    """A node pattern constrained by exactly one plain label."""
+    return len(np.labels) == 1 and _no_node_filters(np)
+
+
+def _map_threading(walk, df, e):
+    """Rebuild expression ``e`` from ``walk(df, child) -> (df, child)``
+    over its expression children, threading the DataFrame through."""
+    if not isinstance(e, A.Expr):
+        return df, e
+
+    def child(c):
+        nonlocal df
+        if not isinstance(c, A.Expr):
+            return c
+        df, c = walk(df, c)
+        return c
+
+    e = A.map_children(e, child)
+    return df, e
+
+
+_SUBQUERY_EXPRS = (A.PatternComp, A.PatternPred, A.ExistsSub, A.CountSub,
+                   A.CollectSub, A.ShortestPathExpr)
 
 
 def _listcomp_needs_rows(e) -> bool:
@@ -112,41 +112,11 @@ def _listcomp_needs_rows(e) -> bool:
     lambda variable — only then must the lambda become a rowstream
     (translate._lower_listcomp_subq); otherwise the ordinary column
     lowering is correct and cheaper."""
-    import dataclasses
+    def subq(n) -> bool:
+        return isinstance(n, _SUBQUERY_EXPRS)
 
-    def refs_var(node, name) -> bool:
-        if isinstance(node, (list, tuple)):
-            return any(refs_var(x, name) for x in node)
-        if isinstance(node, A.Var):
-            return node.name == name
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            if getattr(node, "var", None) == name:
-                return True
-            return any(refs_var(getattr(node, f.name), name)
-                       for f in dataclasses.fields(node))
-        return False
-
-    hit = [False]
-
-    def scan(node):
-        if hit[0]:
-            return
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                scan(x)
-            return
-        if isinstance(node, (A.PatternComp, A.PatternPred, A.ExistsSub,
-                             A.CountSub, A.CollectSub,
-                             A.ShortestPathExpr)):
-            if refs_var(node, e.var):
-                hit[0] = True
-            return
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            for f in dataclasses.fields(node):
-                scan(getattr(node, f.name))
-
-    scan((e.where, e.projection))
-    return hit[0]
+    return any(subq(n) and e.var in _collect_var_names(n)
+               for n in A.walk((e.where, e.projection), skip=subq))
 
 
 _ANON_COUNTER = 0
@@ -177,8 +147,6 @@ def check_clause_syntax_mixing(clause, extensions: bool = False) -> None:
     (EXISTS/COUNT/COLLECT) and CALL {} bodies conflict within their
     enclosing clause while separate top-level clauses never do.
     """
-    import dataclasses
-
     flags = {"read_legacy": False, "read_gpm": False,
              "write_legacy": False, "write_gpm": False,
              "vlr": False, "qpp": False,
@@ -196,10 +164,6 @@ def check_clause_syntax_mixing(clause, extensions: bool = False) -> None:
                 flags[b + "_gpm"] = True
 
     def walk(node, write_ctx, in_qpp=False):
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                walk(x, write_ctx, in_qpp)
-            return
         if isinstance(node, A.Create) or isinstance(
                 node, (A.SetClause, A.RemoveClause, A.Delete)):
             write_ctx = True
@@ -238,9 +202,8 @@ def check_clause_syntax_mixing(clause, extensions: bool = False) -> None:
                         "GQL path selector instead")
             elif node.selector is not None:
                 flags["selector"] = True
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            for f in dataclasses.fields(node):
-                walk(getattr(node, f.name), write_ctx, in_qpp)
+        for c in A.children(node):
+            walk(c, write_ctx, in_qpp)
 
     walk(clause, False)
     for b in ("read", "write"):
@@ -386,28 +349,7 @@ class Translator:
                     "must be a map")
             obj = dataclasses.replace(obj, props=A.MapLit(
                 [(k, A.Lit(x)) for k, x in v.items()]))
-        if dataclasses.is_dataclass(obj) and not isinstance(obj, type):
-            changes = {}
-            for f in dataclasses.fields(obj):
-                val = getattr(obj, f.name)
-                nv = val
-                if dataclasses.is_dataclass(val):
-                    nv = self._inline_param_props(val)
-                elif isinstance(val, list):
-                    nv = [
-                        self._inline_param_props(x)
-                        if dataclasses.is_dataclass(x) else
-                        (tuple(self._inline_param_props(y)
-                               if dataclasses.is_dataclass(y) else y
-                               for y in x) if isinstance(x, tuple) else x)
-                        for x in val]
-                    if all(a is b for a, b in zip(nv, val)):
-                        nv = val
-                if nv is not val:
-                    changes[f.name] = nv
-            if changes:
-                obj = dataclasses.replace(obj, **changes)
-        return obj
+        return A.map_children(obj, self._inline_param_props)
 
     def _single(self, q: A.SingleQuery) -> DataFrame:
         q = self._inline_param_props(q)
@@ -632,37 +574,18 @@ class Translator:
         and no projection uses ``*`` — i.e. dropping its binding cannot
         change any result or predicate (usage test behind scan elision,
         mirroring the reference's pruningVarExpander usage analysis)."""
-        import dataclasses
-
         root = getattr(self, "query_ast", None)
         if root is None:
             return False
         count = 0
-        star = False
-
-        def walk(node) -> None:
-            nonlocal count, star
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    walk(x)
-                return
-            if isinstance(node, A.Var):
-                if node.name == name:
-                    count += 1
-                return
-            if not dataclasses.is_dataclass(node):
-                return
-            if getattr(node, "star", False):
-                star = True
-            for f in dataclasses.fields(node):
-                v = getattr(node, f.name)
-                if f.name in ("var", "path_var") and v == name:
-                    count += 1
-                elif dataclasses.is_dataclass(v) or isinstance(v, (list, tuple)):
-                    walk(v)
-
-        walk(root)
-        return count == 1 and not star
+        for n in A.walk(root):
+            if isinstance(n, A.Var):
+                count += n.name == name
+            elif getattr(n, "star", False):
+                return False
+            else:
+                count += _bound_names(n).count(name)
+        return count == 1
 
     def _stmt_has_writes(self) -> bool:
         """True when the statement contains any updating clause (anywhere,
@@ -670,33 +593,15 @@ class Translator:
         that rely on source-declared invariants holding for every row the
         statement can observe: a write inside the SAME statement could
         create entities the declaration does not cover."""
-        import dataclasses
-
         root = getattr(self, "query_ast", None)
         if root is None:
             return True  # unknown scope: be conservative
         memo = getattr(self, "_stmt_writes_memo", None)
         if memo is not None and memo[0] is root:
             return memo[1]
-        hit = False
-
-        def walk(node) -> None:
-            nonlocal hit
-            if hit:
-                return
-            if isinstance(node, (A.Create, A.Merge, A.SetClause,
-                                 A.RemoveClause, A.Delete, A.Foreach)):
-                hit = True
-                return
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    walk(x)
-                return
-            if dataclasses.is_dataclass(node) and not isinstance(node, type):
-                for f in dataclasses.fields(node):
-                    walk(getattr(node, f.name))
-
-        walk(root)
+        hit = any(isinstance(n, (A.Create, A.Merge, A.SetClause,
+                                 A.RemoveClause, A.Delete, A.Foreach))
+                  for n in A.walk(root))
         self._stmt_writes_memo = (root, hit)
         return hit
 
@@ -706,51 +611,29 @@ class Translator:
         projection ``*`` could observe the full entity — the node-frame
         join can then be replaced by deriving ``prop`` from the edge-end
         id (usage test behind key-property elision)."""
-        import dataclasses
-
         root = getattr(self, "query_ast", None)
         if root is None:
             return False
-        ok = True
-        uses = 0
-        binds = 0
-        star = False
 
-        def walk(node) -> None:
-            nonlocal ok, uses, binds, star
-            if not ok:
-                return
-            if isinstance(node, A.Prop) and isinstance(node.subject, A.Var) \
-                    and node.subject.name == name:
-                if node.key == prop:
-                    uses += 1
-                    return  # the Var inside is the sanctioned access
-                ok = False
-                return
-            if isinstance(node, A.Var):
-                if node.name == name:
-                    ok = False  # any non-key-prop use needs the binding
-                return
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    walk(x)
-                return
-            if not dataclasses.is_dataclass(node) or isinstance(node, type):
-                return
-            if getattr(node, "star", False):
-                star = True
-            if isinstance(node, A.MapProjection) and node.var == name:
-                ok = False
-                return
-            for f in dataclasses.fields(node):
-                v = getattr(node, f.name)
-                if f.name in ("var", "path_var") and v == name:
-                    binds += 1
-                elif dataclasses.is_dataclass(v) or isinstance(v, (list, tuple)):
-                    walk(v)
+        def access(n) -> bool:
+            return (isinstance(n, A.Prop) and isinstance(n.subject, A.Var)
+                    and n.subject.name == name)
 
-        walk(root)
-        return ok and not star and binds <= 1 and uses >= 1
+        uses = binds = 0
+        for n in A.walk(root, skip=access):
+            if access(n):
+                if n.key != prop:
+                    return False
+                uses += 1  # the Var inside is the sanctioned access
+            elif isinstance(n, A.Var):
+                if n.name == name:
+                    return False  # any non-key-prop use needs the binding
+            elif getattr(n, "star", False) or (
+                    isinstance(n, A.MapProjection) and n.var == name):
+                return False
+            else:
+                binds += _bound_names(n).count(name)
+        return binds <= 1 and uses >= 1
 
     def _var_endpoints_only(self, name: str, defining) -> bool:
         """True when every use of ``name`` in the statement is a BARE
@@ -763,102 +646,48 @@ class Translator:
         an id-only struct (usage test behind id-only endpoint elision).
         ``defining`` is the NodePat being elided (exempt — its own
         label-implication gates already ran)."""
-        import dataclasses
-
         root = getattr(self, "query_ast", None)
         if root is None:
             return False
-        ok = True
 
-        def bare(np) -> bool:
-            return (not np.labels and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
-        def walk(node, in_rich: bool) -> None:
-            nonlocal ok
-            if not ok:
-                return
+        def ok(node, in_rich: bool) -> bool:
             if isinstance(node, A.Var):
-                if node.name == name:
-                    ok = False
-                return
-            if isinstance(node, A.MapProjection):
-                if node.var == name:
-                    ok = False
-                    return
+                return node.name != name
             if isinstance(node, A.NodePat):
                 if node is defining:
-                    return
+                    return True
                 if node.var == name:
-                    if in_rich or not bare(node):
-                        ok = False
-                    return
+                    return not in_rich and _bare_node(node)
                 # fall through: a node pat's props/where may hold exprs
-            if isinstance(node, A.PatternPart):
-                rich = (node.path_var is not None
-                        or node.selector is not None
-                        or getattr(node, "legacy_shortest", False)
-                        or any(isinstance(el, A.QPP)
-                               or (isinstance(el, A.RelPat)
-                                   and el.var_length)
-                               for el in node.elements))
-                for el in node.elements:
-                    walk(el, in_rich or rich)
-                return
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    walk(x, in_rich)
-                return
-            if not dataclasses.is_dataclass(node) or isinstance(node, type):
-                return
-            if getattr(node, "star", False):
-                ok = False  # RETURN/WITH * observes the full entity
-                return
-            for f in dataclasses.fields(node):
-                v = getattr(node, f.name)
-                if f.name in ("var", "path_var") and v == name \
-                        and not isinstance(node, A.NodePat):
-                    ok = False  # rebound by UNWIND/rel var/report etc.
-                    return
-                walk(v, in_rich)
+            elif isinstance(node, A.PatternPart):
+                in_rich = in_rich or (
+                    node.path_var is not None
+                    or node.selector is not None
+                    or node.legacy_shortest
+                    or any(isinstance(el, A.QPP)
+                           or (isinstance(el, A.RelPat) and el.var_length)
+                           for el in node.elements))
+            elif getattr(node, "star", False):
+                return False  # RETURN/WITH * observes the full entity
+            elif name in _bound_names(node):
+                return False  # rebound by UNWIND/rel var/map projection
+            return all(ok(c, in_rich) for c in A.children(node))
 
-        walk(root, False)
-        return ok
+        return ok(root, False)
 
     def _rel_endpoints_needed(self, rvar: Optional[str]) -> bool:
         """True when startNode()/endNode() is called on ``rvar`` anywhere
         in the statement — its endpoint node bindings must then stay."""
-        import dataclasses
-
         if rvar is None:
             return False
         root = getattr(self, "query_ast", None)
         if root is None:
             return True
-        found = False
-
-        def walk(node) -> None:
-            nonlocal found
-            if found:
-                return
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    walk(x)
-                return
-            if not dataclasses.is_dataclass(node):
-                return
-            if isinstance(node, A.Func) and node.name in ("startnode", "endnode") \
-                    and node.args and isinstance(node.args[0], A.Var) \
-                    and node.args[0].name == rvar:
-                found = True
-                return
-            for f in dataclasses.fields(node):
-                walk(getattr(node, f.name))
-
-        walk(root)
-        return found
+        return any(isinstance(n, A.Func)
+                   and n.name in ("startnode", "endnode")
+                   and n.args and isinstance(n.args[0], A.Var)
+                   and n.args[0].name == rvar
+                   for n in A.walk(root))
 
     def _compiler(self, df: Optional[DataFrame]) -> ExprCompiler:
         return ExprCompiler(df, self.kinds, self.params, self)
@@ -1197,19 +1026,6 @@ class Translator:
                     return conjuncts(e.left) + conjuncts(e.right)
                 return [e]
 
-            def fv(node, acc):
-                if isinstance(node, (list, tuple)):
-                    for x in node:
-                        fv(x, acc)
-                    return acc
-                if isinstance(node, A.Var):
-                    acc.add(node.name)
-                    return acc
-                if _dc.is_dataclass(node) and not isinstance(node, type):
-                    for f in _dc.fields(node):
-                        fv(getattr(node, f.name), acc)
-                return acc
-
             conj = conjuncts(m.where)
             new_parts, changed = [], False
             for part in m.parts:
@@ -1221,7 +1037,8 @@ class Translator:
                     if (isinstance(el, A.RelPat) and el.var_length
                             and el.var):
                         dep.add(el.var)
-                push = [c for c in conj if fv(c, set()) & dep]
+                push = [c for c in conj
+                        if _collect_var_names(c, binders=False) & dep]
                 if push:
                     ids = {id(c) for c in push}
                     conj = [c for c in conj if id(c) not in ids]
@@ -1332,22 +1149,7 @@ class Translator:
                     pattern_vars.add(v)
         # outer variables referenced only in predicates (WHERE a.x = b.y)
         # correlate too — they must be visible inside the optional side
-        import dataclasses as _dc
-
-        def free_vars(node, acc):
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    free_vars(x, acc)
-                return acc
-            if isinstance(node, A.Var):
-                acc.add(node.name)
-                return acc
-            if _dc.is_dataclass(node):
-                for f in _dc.fields(node):
-                    free_vars(getattr(node, f.name), acc)
-            return acc
-
-        referenced = free_vars(m, set())
+        referenced = _collect_var_names(m, binders=False)
         shared = [v for v in df.columns
                   if v in pattern_vars or v in referenced]
         inner = A.Match(m.parts, optional=False, where=m.where)
@@ -1417,8 +1219,6 @@ class Translator:
           (count(*), sum over outer vars, collect) observes the row
           multiplicity the join created, so the rewrite bails.
         Returns (df_with_count_column, rewritten_projection) or None."""
-        import dataclasses as _dc
-
         if df is None or m.where is not None or len(m.parts) != 1:
             return None
         if not isinstance(nxt, A.Projection) or nxt.star:
@@ -1439,26 +1239,14 @@ class Translator:
         if rp.var is not None and rp.var in df.columns:
             return None  # re-bound rel var: ProjectEndpoints semantics
 
-        def bare(np: A.NodePat) -> bool:
-            return (not np.labels and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
-        def single_label(np: A.NodePat) -> bool:
-            return (len(np.labels) == 1 and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
         bound_l = a_pat.var is not None and a_pat.var in df.columns
         bound_r = b_pat.var is not None and b_pat.var in df.columns
         if bound_l == bound_r:
             return None
         bnd, fresh = (a_pat, b_pat) if bound_l else (b_pat, a_pat)
-        if self.kinds.get(bnd.var) != "node" or not bare(bnd):
+        if self.kinds.get(bnd.var) != "node" or not _bare_node(bnd):
             return None
-        if not (bare(fresh) or single_label(fresh)):
+        if not (_bare_node(fresh) or _single_label_node(fresh)):
             return None
         if fresh.labels:
             # the label must be implied by the rel type's declared
@@ -1541,8 +1329,6 @@ class Translator:
         aggregate (it would observe the join's row multiplicity), or any
         use of a ``cnt_vars`` variable outside a rewritable count
         (including nested patterns naming it, which would correlate)."""
-        import dataclasses as _dc
-
         state = {"ok": True, "n": 0}
 
         def rewrite(node):
@@ -1589,26 +1375,7 @@ class Translator:
                 # a nested pattern naming the var would correlate to it
                 state["ok"] = False
                 return node
-            if _dc.is_dataclass(node):
-                changes = {}
-                for f in _dc.fields(node):
-                    v = getattr(node, f.name)
-                    nv = rewrite_val(v)
-                    if nv is not v:
-                        changes[f.name] = nv
-                return _dc.replace(node, **changes) if changes else node
-            return node
-
-        def rewrite_val(v):
-            if _dc.is_dataclass(v) and not isinstance(v, type):
-                return rewrite(v)
-            if isinstance(v, list):
-                nl = [rewrite_val(x) for x in v]
-                return nl if any(a is not b for a, b in zip(nl, v)) else v
-            if isinstance(v, tuple):
-                nt = tuple(rewrite_val(x) for x in v)
-                return nt if any(a is not b for a, b in zip(nt, v)) else v
-            return v
+            return A.map_children(node, rewrite)
 
         new_proj = rewrite(nxt)
         if not state["ok"] or state["n"] == 0:
@@ -1672,18 +1439,6 @@ class Translator:
                 rp.var == getattr(e, "var", None) for e in els[:-2]):
             return None  # same-MATCH rel-var reuse has its own semantics
 
-        def bare(np: A.NodePat) -> bool:
-            return (not np.labels and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
-        def single_label(np: A.NodePat) -> bool:
-            return (len(np.labels) == 1 and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
         # trailing node must be fresh and either unconstrained or
         # implied by the declared endpoint label
         if b_pat.var is not None and df is not None \
@@ -1693,7 +1448,7 @@ class Translator:
                 and any(b_pat.var == getattr(e, "var", None)
                         for e in els[:-1]):
             return None  # closes a cycle within the pattern
-        if not (bare(b_pat) or single_label(b_pat)):
+        if not (_bare_node(b_pat) or _single_label_node(b_pat)):
             return None
         if b_pat.labels:
             if rp.direction == "both":
@@ -1716,34 +1471,8 @@ class Translator:
         if df is not None and any(v in df.columns for v in cnt_vars):
             return None
         # the trailing vars must not leak into the clause WHERE
-        if m.where is not None:
-            leak = {"hit": False}
-
-            def scan_w(node):
-                if leak["hit"]:
-                    return
-                if isinstance(node, A.Var) and node.name in cnt_vars:
-                    leak["hit"] = True
-                    return
-                if isinstance(node, A.MapProjection) \
-                        and node.var in cnt_vars:
-                    leak["hit"] = True
-                    return
-                if isinstance(node, (A.NodePat, A.RelPat)) \
-                        and getattr(node, "var", None) in cnt_vars:
-                    leak["hit"] = True
-                    return
-                if _dc.is_dataclass(node):
-                    for f in _dc.fields(node):
-                        v = getattr(node, f.name)
-                        for x in (v if isinstance(v, (list, tuple))
-                                  else [v]):
-                            if _dc.is_dataclass(x):
-                                scan_w(x)
-
-            scan_w(m.where)
-            if leak["hit"]:
-                return None
+        if m.where is not None and _collect_var_names(m.where) & cnt_vars:
+            return None
 
         cnt_col = self._anon_var("pacnt")
         extras: dict = {}
@@ -1869,28 +1598,16 @@ class Translator:
         if rp.var is not None and rp.var in cur_df.columns:
             return None  # re-bound rel var: ProjectEndpoints semantics
 
-        def bare(np: A.NodePat) -> bool:
-            return (not np.labels and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
-        def single_label(np: A.NodePat) -> bool:
-            return (len(np.labels) == 1 and np.label_tree is None
-                    and not np.neg_labels and not np.any_labels
-                    and not np.req_any_label and not np.req_no_label
-                    and np.props is None and np.where is None)
-
         bound_l = a_pat.var is not None and a_pat.var in cur_df.columns
         bound_r = b_pat.var is not None and b_pat.var in cur_df.columns
         if bound_l == bound_r:
             return None
         bnd, fresh = (a_pat, b_pat) if bound_l else (b_pat, a_pat)
-        if self.kinds.get(bnd.var) != "node" or not bare(bnd):
+        if self.kinds.get(bnd.var) != "node" or not _bare_node(bnd):
             return None
         if fresh.var is not None and fresh.var == bnd.var:
             return None  # cycle back to the anchor
-        if not (bare(fresh) or single_label(fresh)):
+        if not (_bare_node(fresh) or _single_label_node(fresh)):
             return None
         if fresh.labels:
             # label must be implied by the rel type's declared endpoint
@@ -1941,44 +1658,19 @@ class Translator:
         the rel var ``rv`` and contains no construct whose compilation
         could reach beyond the rel struct (nested patterns, subqueries,
         local-binder comprehensions, aggregates)."""
-        import dataclasses as _dc
-
-        ok = {"v": True}
-
-        def walk(node):
-            if not ok["v"]:
-                return
-            if isinstance(node, A.Var):
-                if rv is None or node.name != rv:
-                    ok["v"] = False
-                return
-            if isinstance(node, A.MapProjection):
-                if rv is None or node.var != rv:
-                    ok["v"] = False
-                    return
-            if isinstance(node, (A.NodePat, A.RelPat, A.PatternPred,
-                                 A.ExistsSub, A.CollectSub, A.CountSub,
-                                 A.ShortestPathExpr, A.PatternComp,
-                                 A.ListComp, A.Quantifier, A.Reduce,
-                                 A.CountStar)):
-                ok["v"] = False
-                return
-            if isinstance(node, A.Func) and is_agg_fn(node.name):
-                ok["v"] = False
-                return
-            if _dc.is_dataclass(node) and not isinstance(node, type):
-                for f in _dc.fields(node):
-                    v = getattr(node, f.name)
-                    for x in (v if isinstance(v, (list, tuple)) else [v]):
-                        if isinstance(x, tuple):
-                            for y in x:
-                                if _dc.is_dataclass(y):
-                                    walk(y)
-                        elif _dc.is_dataclass(x):
-                            walk(x)
-
-        walk(e)
-        return ok["v"]
+        opaque = _SUBQUERY_EXPRS + (A.NodePat, A.RelPat, A.ListComp,
+                                    A.Quantifier, A.Reduce, A.CountStar)
+        for n in A.walk(e):
+            if isinstance(n, A.Var):
+                if rv is None or n.name != rv:
+                    return False
+            elif isinstance(n, A.MapProjection):
+                if rv is None or n.var != rv:
+                    return False
+            elif isinstance(n, opaque) or (
+                    isinstance(n, A.Func) and is_agg_fn(n.name)):
+                return False
+        return True
 
     def _filter_rel_scan(self, scan: DataFrame, rv: Optional[str],
                          preds) -> Optional[DataFrame]:
@@ -2142,17 +1834,6 @@ class Translator:
             base = typed(right_labels, left_labels)
         else:
             base = typed()
-        # shared-base fusion: count which declared-base shards this scan
-        # touches; a second touch within the statement persists the base
-        # so every shard reads ONE FileScan (graph.note_rel_scan)
-        if rp.types:
-            touched = list(rp.types)
-        elif rp.neg_types:
-            touched = [t for t in self.graph.rel_frames
-                       if t not in rp.neg_types]
-        else:
-            touched = list(self.graph.rel_frames)
-        self.graph.note_rel_scan(touched)
         props = [c for c in base.columns if c not in REL_META]
         if slim:
             struct = F.struct(F.col("id").alias("_id"))
@@ -2957,26 +2638,12 @@ class Translator:
         # scope there): hoist it to the unit-level WHERE, which binds
         # every unit variable per repetition
         # (QuantifiedPathPatternGpmTests scenario 30)
-        import dataclasses as _dc
-
-        def _fv(node, acc):
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    _fv(x, acc)
-                return acc
-            if isinstance(node, A.Var):
-                acc.add(node.name)
-                return acc
-            if _dc.is_dataclass(node) and not isinstance(node, type):
-                for f in _dc.fields(node):
-                    _fv(getattr(node, f.name), acc)
-            return acc
-
         new_inner = []
         for el in inner:
             w = getattr(el, "where", None)
             if (w is not None and getattr(el, "var", None)
-                    and not (_fv(w, set()) <= {el.var})):
+                    and not (_collect_var_names(w, binders=False)
+                             <= {el.var})):
                 qpp_where = (w if qpp_where is None
                              else A.BinOp("AND", qpp_where, w))
                 el = _dc.replace(el, where=None)
@@ -2997,13 +2664,7 @@ class Translator:
             has_subq = [False]
 
             def scan(node, shadow):
-                if isinstance(node, (list, tuple)):
-                    for x in node:
-                        scan(x, shadow)
-                    return
-                if isinstance(node, (A.ExistsSub, A.CountSub,
-                                     A.CollectSub, A.PatternPred,
-                                     A.PatternComp, A.ShortestPathExpr)):
+                if isinstance(node, _SUBQUERY_EXPRS):
                     # opaque here: these bind their own variables (path
                     # vars, pattern vars) and correlate by name when the
                     # per-repetition lowering runs
@@ -3016,18 +2677,17 @@ class Translator:
                 if isinstance(node, (A.ListComp, A.Quantifier)):
                     scan(node.source, shadow)
                     inner_sh = shadow | {node.var}
-                    for f in _dc.fields(node):
-                        if f.name not in ("var", "source"):
-                            scan(getattr(node, f.name), inner_sh)
+                    for c in A.children(node):
+                        if c is not node.source:
+                            scan(c, inner_sh)
                     return
                 if isinstance(node, A.Reduce):
                     scan(node.init, shadow)
                     scan(node.source, shadow)
                     scan(node.expr, shadow | {node.var, node.acc})
                     return
-                if _dc.is_dataclass(node):
-                    for f in _dc.fields(node):
-                        scan(getattr(node, f.name), shadow)
+                for c in A.children(node):
+                    scan(c, shadow)
 
             scan(qpp_where, set())
             avail = inner_vars | set(df.columns) | set(self.params or {})
@@ -3460,21 +3120,9 @@ class Translator:
             def subst(e):
                 if isinstance(e, A.Var) and e.name in grp_vars:
                     return A.Index(A.Var(e.name), A.Var(idx))
-                if not _dc.is_dataclass(e) or not isinstance(e, A.Expr):
+                if not isinstance(e, A.Expr):
                     return e
-                changes = {}
-                for f in _dc.fields(e):
-                    v0 = getattr(e, f.name)
-                    if isinstance(v0, A.Expr):
-                        nv = subst(v0)
-                        if nv is not v0:
-                            changes[f.name] = nv
-                    elif isinstance(v0, list) and v0:
-                        nl = [subst(x) if isinstance(x, A.Expr) else x
-                              for x in v0]
-                        if any(a is not b for a, b in zip(nl, v0)):
-                            changes[f.name] = nl
-                return _dc.replace(e, **changes) if changes else e
+                return A.map_children(e, subst)
 
             pending.append(A.Quantifier(
                 "all", idx,
@@ -3538,48 +3186,35 @@ class Translator:
         relationships(p) used any other way marks rel_rich (rel properties
         must be resolved); every remaining use of p (RETURN p,
         [n IN nodes(p) | n.prop], …) marks both."""
-        import dataclasses
-
         root = getattr(self, "query_ast", None)
         if root is None:
             return True, True
-        node_rich = rel_rich = False
 
         def is_path_var(e) -> bool:
             return isinstance(e, A.Var) and e.name == pvar
 
-        def walk(node) -> None:
-            nonlocal node_rich, rel_rich
-            if (node_rich and rel_rich) or not dataclasses.is_dataclass(node):
-                return
-            if isinstance(node, A.Func):
-                n, a = node.name, node.args
-                if n == "length" and len(a) == 1 and is_path_var(a[0]):
-                    return
-                if n == "relationships" and len(a) == 1 \
-                        and is_path_var(a[0]):
-                    rel_rich = True
-                    return
-                if n == "nodes" and len(a) == 1 and is_path_var(a[0]):
-                    node_rich = True
-                    return
-                if n == "size" and len(a) == 1 and isinstance(a[0], A.Func) \
-                        and a[0].name in ("nodes", "relationships") \
-                        and len(a[0].args) == 1 and is_path_var(a[0].args[0]):
-                    return
-            if is_path_var(node):
-                node_rich = rel_rich = True
-                return
-            for f in dataclasses.fields(node):
-                v = getattr(node, f.name)
-                if dataclasses.is_dataclass(v):
-                    walk(v)
-                elif isinstance(v, (list, tuple)):
-                    for x in v:
-                        if dataclasses.is_dataclass(x):
-                            walk(x)
+        def use(n) -> Optional[str]:
+            # the path function ``n`` applies to p, when it reads p only
+            # through that function: length / size (shape), nodes, rels
+            if not (isinstance(n, A.Func) and len(n.args) == 1):
+                return None
+            a = n.args[0]
+            if n.name in ("length", "nodes", "relationships") \
+                    and is_path_var(a):
+                return n.name
+            if n.name == "size" and isinstance(a, A.Func) \
+                    and a.name in ("nodes", "relationships") \
+                    and len(a.args) == 1 and is_path_var(a.args[0]):
+                return "size"
+            return None
 
-        walk(root)
+        node_rich = rel_rich = False
+        for n in A.walk(root, skip=use):
+            u = use(n)
+            node_rich = node_rich or u == "nodes"
+            rel_rich = rel_rich or u == "relationships"
+            if is_path_var(n) or (node_rich and rel_rich):
+                return True, True
         return node_rich, rel_rich
 
     def _resolve_path_rels(self, df: DataFrame, pvar: str) -> DataFrame:
@@ -3666,25 +3301,7 @@ class Translator:
                 # pattern comprehension in predicate position, e.g.
                 # WHERE size([(n)-->(m) | m]) > 2 — RollUpApply (LP:3534)
                 return self._lower_pattern_comp(df, e)
-            # rebuild children
-            import dataclasses
-
-            if not dataclasses.is_dataclass(e):
-                return df, e
-            changes = {}
-            for f in dataclasses.fields(e):
-                v = getattr(e, f.name)
-                if isinstance(v, A.Expr):
-                    df, nv = walk(df, v)
-                    if nv is not v:
-                        changes[f.name] = nv
-                elif isinstance(v, list) and v:
-                    df, nl, changed = _walk_expr_list(walk, df, v)
-                    if changed:
-                        changes[f.name] = nl
-            if changes:
-                e = dataclasses.replace(e, **changes)
-            return df, e
+            return _map_threading(walk, df, e)
 
         def correlate(parts: List[A.PatternPart], where=None) -> List[str]:
             # any outer-scope name referenced anywhere in the subquery —
@@ -3894,8 +3511,6 @@ class Translator:
         through every projection as hidden columns, like COLLECT {}), union
         the branches, then per-outer-row flag/count via groupBy + left
         join (SemiApply / decorrelated count, LP:3659)."""
-        import dataclasses
-
         self._check_subquery_body(body, list(df.columns))
         names = _collect_var_names(body)
         shared = [c for c in df.columns if c in names]
@@ -4023,24 +3638,7 @@ class Translator:
                 and len(last.items) == 1):
             raise TranslateError("COLLECT {} must end in RETURN <one column>")
 
-        names: set = set()
-
-        def walk_names(node) -> None:
-            if isinstance(node, A.Var):
-                names.add(node.name)
-            if dataclasses.is_dataclass(node):
-                for f in dataclasses.fields(node):
-                    v = getattr(node, f.name)
-                    if f.name in ("var", "path_var") and isinstance(v, str):
-                        names.add(v)
-                    if dataclasses.is_dataclass(v):
-                        walk_names(v)
-                    elif isinstance(v, (list, tuple)):
-                        for x in v:
-                            if dataclasses.is_dataclass(x):
-                                walk_names(x)
-
-        walk_names(q)
+        names = _collect_var_names(q)
         shared = [c for c in df.columns if c in names]
 
         # hoist the final ORDER BY into extra (key) return items
@@ -4227,22 +3825,8 @@ class Translator:
         # projection correlate too — `[(a:A WHERE a.prop > x)-->(b) | …]`
         # must see the enclosing row's `x`
         # (NodePatternPredicatesAcceptance)
-        import dataclasses as _dc
-
-        def fv(node, acc):
-            if isinstance(node, (list, tuple)):
-                for x in node:
-                    fv(x, acc)
-                return acc
-            if isinstance(node, A.Var):
-                acc.add(node.name)
-                return acc
-            if _dc.is_dataclass(node) and not isinstance(node, type):
-                for f in _dc.fields(node):
-                    fv(getattr(node, f.name), acc)
-            return acc
-
-        referenced = fv((e.pattern, e.where, e.projection), set())
+        referenced = _collect_var_names((e.pattern, e.where, e.projection),
+                                        binders=False)
         shared = [v for v in df.columns if v in pv or v in referenced]
         base = df.select(*shared).dropDuplicates() if shared else None
         sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
@@ -4424,8 +4008,6 @@ class Translator:
 
     def _lower_all(self, df: DataFrame, expr: A.Expr) -> Tuple[DataFrame, A.Expr]:
         """Lower subquery predicates AND pattern comprehensions."""
-        import dataclasses
-
         def walk(df, e):
             if isinstance(e, A.ShortestPathExpr):
                 return self._lower_shortest_expr(df, e)
@@ -4453,22 +4035,7 @@ class Translator:
             lowered = self._maybe_lower_endpoint(df, e)
             if lowered is not None:
                 return lowered
-            if not dataclasses.is_dataclass(e) or not isinstance(e, A.Expr):
-                return df, e
-            changes = {}
-            for f in dataclasses.fields(e):
-                v = getattr(e, f.name)
-                if isinstance(v, A.Expr):
-                    df, nv = walk(df, v)
-                    if nv is not v:
-                        changes[f.name] = nv
-                elif isinstance(v, list) and v:
-                    df, nl, changed = _walk_expr_list(walk, df, v)
-                    if changed:
-                        changes[f.name] = nl
-            if changes:
-                e = dataclasses.replace(e, **changes)
-            return df, e
+            return _map_threading(walk, df, e)
 
         return walk(df, expr)
 
@@ -5470,9 +5037,9 @@ class Translator:
         agg_map: Dict[int, str] = {}
         agg_srcs: List[Tuple[str, A.Expr]] = []  # (placeholder, source expr)
 
-        def extract(e: A.Expr) -> A.Expr:
-            import dataclasses
-
+        def extract(e):
+            if not isinstance(e, A.Expr):
+                return e
             if isinstance(e, A.CountStar) or (
                     isinstance(e, A.Func) and is_agg_fn(e.name)):
                 key = len(agg_exprs)
@@ -5484,26 +5051,7 @@ class Translator:
             for gi in group_items:
                 if e == gi.expr:
                     return A.Var(gi.alias or gi.text)
-            if not dataclasses.is_dataclass(e):
-                return e
-            changes = {}
-            for f in dataclasses.fields(e):
-                v = getattr(e, f.name)
-                if isinstance(v, A.Expr):
-                    nv = extract(v)
-                    if nv is not v:
-                        changes[f.name] = nv
-                elif isinstance(v, list) and v and isinstance(v[0], A.Expr):
-                    nl = [extract(x) for x in v]
-                    changes[f.name] = nl
-                elif isinstance(v, list) and v and isinstance(v[0], tuple):
-                    # CASE whens / map-literal items: lists of expr tuples
-                    nl = [tuple(extract(y) if isinstance(y, A.Expr) else y
-                                for y in x) for x in v]
-                    changes[f.name] = nl
-            if changes:
-                return dataclasses.replace(e, **changes)
-            return e
+            return A.map_children(e, extract)
 
         post_items: List[Tuple[str, A.Expr]] = []
         for it in items:

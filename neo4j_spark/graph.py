@@ -82,7 +82,6 @@ class PropertyGraph:
         node_frames: Dict[str, DataFrame],
         rel_frames: Dict[str, DataFrame],
         rel_endpoint_labels: Optional[Dict[str, tuple]] = None,
-        rel_shared_bases: Optional[Dict[str, tuple]] = None,
         rel_shards: Optional[Dict[str, list]] = None,
         node_key_props: Optional[Dict[str, tuple]] = None,
     ) -> None:
@@ -106,21 +105,6 @@ class PropertyGraph:
             t: self.rel_frames[t] for t in self.rel_shards
             if t in self.rel_frames
         }
-        # shared-base declaration: base name -> (base DataFrame, types)
-        # for relationship shards that are row images of ONE physical
-        # table (e.g. CONTAINS and SUPPLIED_BY <- lineitem).  When a
-        # single statement scans two such shards (or one shard twice),
-        # the translator persists the base so Spark's cache serves both
-        # subtrees from ONE FileScan — without it, the biggest table is
-        # scanned (and its rel-id window re-shuffled) once per pattern
-        # role.  Declared by the source builder, never inferred.
-        self.rel_shared_bases = dict(rel_shared_bases or {})
-        self._rel_base_of: Dict[str, str] = {}
-        for bname, (_, types) in self.rel_shared_bases.items():
-            for t in types:
-                self._rel_base_of[t] = bname
-        self._persisted_bases: set = set()
-        self._scan_counts: Dict[str, int] = {}
         # optional schema declaration: rel type -> (src_label, dst_label)
         # guarantees (None = unconstrained end).  The translator uses it to
         # elide node-frame scans for label-implied endpoints — the Spark
@@ -171,42 +155,6 @@ class PropertyGraph:
         # groups (the 100 TB path; un-indexed queries fall back to a scan)
         self.fulltext_indexes: Dict[str, Dict] = {}
 
-    def begin_scan_tracking(self) -> None:
-        """Reset per-statement rel-scan counts (called at each top-level
-        query translation, so shared-base fusion stays statement-scoped:
-        one query reading CONTAINS and SUPPLIED_BY persists lineitem; two
-        unrelated queries each reading one shard do not)."""
-        self._scan_counts = {}
-
-    def note_rel_scan(self, types: Iterable[str]) -> None:
-        """Record a relationship scan over ``types``; the second scan of
-        any shard of a declared shared base within the current statement
-        persists the base, fusing all its shards onto one FileScan.
-
-        OPT-IN (``neo4j_spark.scan.fuseSharedBases=true``): measured at
-        sf0.1, the fused plan is SLOWER for q5-shape queries (5.8 s vs
-        3.0 s cold, 1.6 s vs 1.2 s warm) because Catalyst already prunes
-        the rel-id window out of each un-fused scan (0 Window operators
-        in q5's executed plan) and pushes per-shard column pruning and
-        filters into parquet, while the cache must materialize the full
-        window shuffle plus every shared column.  Fusion wins only when
-        the query genuinely consumes rel ids from BOTH shards (the
-        window then runs once instead of per scan) — hence a conf, not a
-        default.  See PERF.md."""
-        for t in types:
-            bname = self._rel_base_of.get(t)
-            if bname is None:
-                continue
-            n = self._scan_counts.get(bname, 0) + 1
-            self._scan_counts[bname] = n
-            if n >= 2 and bname not in self._persisted_bases:
-                base = self.rel_shared_bases[bname][0]
-                fuse = str(base.sparkSession.conf.get(
-                    "neo4j_spark.scan.fuseSharedBases", "false")).lower()
-                if fuse == "true":
-                    base.persist()
-                    self._persisted_bases.add(bname)
-
     def key_prop_of(self, label: str):
         """(prop, id_offset) when ``node[prop] == id - id_offset`` still
         holds for every node carrying ``label``; None otherwise.  The
@@ -250,8 +198,7 @@ class PropertyGraph:
     def copy(self) -> "PropertyGraph":
         """Cheap snapshot: shares the (immutable) frames, isolates writes."""
         g = PropertyGraph(self.node_frames, self.rel_frames,
-                          self.rel_endpoint_labels, self.rel_shared_bases,
-                          self.rel_shards,
+                          self.rel_endpoint_labels, self.rel_shards,
                           node_key_props=self.node_key_props)
         # preserve the ORIGINAL shard-union/key-frame identities:
         # recomputing them from the current frames would re-bless a
@@ -259,7 +206,6 @@ class PropertyGraph:
         # pruning/derivation against stale data
         g._rel_shard_whole = dict(self._rel_shard_whole)
         g._node_key_whole = dict(self._node_key_whole)
-        g._persisted_bases = set(self._persisted_bases)
         g._extra_labels = set(self._extra_labels)
         g._write_epoch = self._write_epoch
         # entries valid for the shared snapshot; dicts diverge after writes

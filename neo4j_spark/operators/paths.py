@@ -304,31 +304,13 @@ def _length_only_use(root, pvar: str) -> bool:
     (compiler/planner/logical/plans/rewriter/pruningVarExpander.scala):
     when no one consumes the path's contents, the search need not carry
     them."""
-    ok = True
+    def length_of_p(node) -> bool:
+        return (isinstance(node, A.Func) and node.name == "length"
+                and len(node.args) == 1 and isinstance(node.args[0], A.Var)
+                and node.args[0].name == pvar)
 
-    def walk(node) -> None:
-        nonlocal ok
-        if not ok or not dataclasses.is_dataclass(node):
-            return
-        if isinstance(node, A.Func):
-            if node.name == "length" and len(node.args) == 1 \
-                    and isinstance(node.args[0], A.Var) \
-                    and node.args[0].name == pvar:
-                return  # allowed use; don't descend
-        if isinstance(node, A.Var) and node.name == pvar:
-            ok = False
-            return
-        for f in dataclasses.fields(node):
-            v = getattr(node, f.name)
-            if dataclasses.is_dataclass(v):
-                walk(v)
-            elif isinstance(v, (list, tuple)):
-                for x in v:
-                    if dataclasses.is_dataclass(x):
-                        walk(x)
-
-    walk(root)
-    return ok
+    return not any(isinstance(n, A.Var) and n.name == pvar
+                   for n in A.walk(root, skip=length_of_p))
 
 
 def shortest_path(tr, df: Optional[DataFrame], part: A.PatternPart,

@@ -150,13 +150,11 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
         "l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice",
         "l_quantity", "l_shipdate")
     # ONE windowed base frame feeds both lineitem-derived rel shards,
-    # pruned to the union of columns either shard consumes.  With
-    # neo4j_spark.scan.fuseSharedBases=true, a statement using both
-    # CONTAINS and SUPPLIED_BY (or one twice) persists this frame so
-    # both shards read ONE FileScan + ONE rel-id window shuffle; by
-    # default each shard keeps its own pruned, filter-pushed scan —
-    # measured faster when rel ids (and hence the window) prune away
-    # (graph.PropertyGraph.note_rel_scan has the numbers).
+    # pruned to the union of columns either shard consumes; each shard
+    # keeps its own pruned, filter-pushed scan, on which Catalyst prunes
+    # the window away when rel ids are unused.  Fusing both shards onto
+    # one persisted scan was measured slower at sf0.1 (5.8 s vs 3.0 s
+    # cold for a q5-shape read) and removed.
     li = lineitem.select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
@@ -223,9 +221,6 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
                              "Supplier": ("suppkey", 4 * TAG),
                              "Part": ("partkey", 5 * TAG),
                              "Order": ("orderkey", 6 * TAG),
-                         },
-                         rel_shared_bases={
-                             "lineitem": (li, ("CONTAINS", "SUPPLIED_BY")),
                          },
                          rel_shards={
                              # every endpoint of these shards is a

@@ -185,13 +185,28 @@ def test_no_new_env_switches():
     assert found == {"SCHEMA_PRUNE", "WIDEN_SPLITS"}
 
 
+def test_single_ast_traversal():
+    """``cypher/ast.py`` is the only module that iterates AST dataclass
+    fields: every analysis and rewriter goes through ``ast.children`` /
+    ``ast.walk`` / ``ast.map_children``, so none can miss the expressions
+    nested in tuples (CASE pairs, map literals, property maps)."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neo4j_spark"
+    field_walk = re.compile(
+        r"dataclasses\.fields\b|_dc\.fields\b|__dataclass_fields__")
+    offenders = sorted(
+        str(f.relative_to(root)) for f in root.rglob("*.py")
+        if field_walk.search(f.read_text()))
+    assert offenders == ["cypher/ast.py"], offenders
+
+
 class TestSharedBaseFusion:
     """CONTAINS and SUPPLIED_BY are row images of one lineitem table
-    (FIXTURES.md): with neo4j_spark.scan.fuseSharedBases=true a
-    statement touching both persists the shared base so every shard is
-    served from ONE FileScan; by default each shard keeps its own
-    pruned, filter-pushed scan (measured faster when Catalyst prunes
-    the rel-id window away — see PropertyGraph.note_rel_scan)."""
+    (FIXTURES.md), yet each shard keeps its own pruned, filter-pushed
+    scan: persisting the shared base for both was measured slower (the
+    window that mints rel ids prunes away when ids are unused)."""
 
     Q = ("MATCH (s:Supplier)<-[sb:SUPPLIED_BY]-(o:Order)"
          "-[l:CONTAINS]->(:Part) WHERE sb.linenumber = l.linenumber "
@@ -207,32 +222,3 @@ class TestSharedBaseFusion:
         # unused — it would force a full lineitem shuffle per scan
         assert "Window" not in plan
         assert rows_default  # non-empty at sf0.001+
-
-    def test_fusion_conf_serves_shards_from_cache(self, spark, tpch_graph):
-        spark.conf.set("neo4j_spark.scan.fuseSharedBases", "true")
-        try:
-            df = cypher(spark, self.Q, tpch_graph)
-            rows_fused = [tuple(r) for r in df.collect()]
-            assert "InMemoryTableScan" in plan_of(df)
-            assert "lineitem" in tpch_graph._persisted_bases
-            # same answer either way
-            df2 = cypher(spark, self.Q, tpch_graph)
-            assert rows_fused == [tuple(r) for r in df2.collect()]
-        finally:
-            spark.conf.unset("neo4j_spark.scan.fuseSharedBases")
-            base, _ = tpch_graph.rel_shared_bases["lineitem"]
-            base.unpersist()
-            tpch_graph._persisted_bases.discard("lineitem")
-
-    def test_single_shard_statement_never_persists(self, spark,
-                                                   tpch_graph):
-        spark.conf.set("neo4j_spark.scan.fuseSharedBases", "true")
-        try:
-            df = cypher(spark,
-                        "MATCH (o:Order)-[l:CONTAINS]->(:Part) "
-                        "RETURN sum(l.quantity) AS q", tpch_graph)
-            df.collect()
-            assert "lineitem" not in tpch_graph._persisted_bases
-            assert "InMemoryTableScan" not in plan_of(df)
-        finally:
-            spark.conf.unset("neo4j_spark.scan.fuseSharedBases")
