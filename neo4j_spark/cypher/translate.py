@@ -353,7 +353,10 @@ class Translator:
 
     def _single(self, q: A.SingleQuery) -> DataFrame:
         q = self._inline_param_props(q)
-        self.query_ast = q  # whole-statement view for usage-based rewrites
+        if getattr(self, "query_ast", None) is None:
+            # whole-statement view for usage-based rewrites (a subquery
+            # translator keeps the enclosing statement's)
+            self.query_ast = q
         self._validate_patterns(q)
         fast = self._count_store_plan(q)
         if fast is not None:
@@ -1141,53 +1144,22 @@ class Translator:
 
     def _optional_match(self, df: DataFrame, m: A.Match) -> DataFrame:
         """Optional (LP:3095) == left outer join on the correlated variables."""
-        pattern_vars = set()
-        for part in m.parts:
-            for el in part.elements:
-                v = getattr(el, "var", None)
-                if v:
-                    pattern_vars.add(v)
+        pattern_vars = {getattr(el, "var", None)
+                        for part in m.parts for el in part.elements}
         # outer variables referenced only in predicates (WHERE a.x = b.y)
         # correlate too — they must be visible inside the optional side
         referenced = _collect_var_names(m, binders=False)
         shared = [v for v in df.columns
                   if v in pattern_vars or v in referenced]
-        inner = A.Match(m.parts, optional=False, where=m.where)
-        if shared:
-            base = df.select(*shared).dropDuplicates()
-            sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-            # usage analysis (scan elision, length-only shortest paths)
-            # reads the WHOLE statement — share it with the subtree
-            sub.query_ast = getattr(self, "query_ast", None)
-            sub.kinds.update({v: self.kinds[v] for v in shared if v in self.kinds})
-            sub.var_labels.update(
-                {v: self.var_labels[v] for v in shared
-                 if v in self.var_labels})
-            matched = sub._match(base, inner)
-            self._merge_sub_scope(sub)
-            new_cols = [c for c in matched.columns if c not in shared]
-            right = matched.select(
-                *[F.col(v).alias(f"__r_{v}") for v in shared], *new_cols)
-            cond = None
-            for v in shared:
-                l = F.col(v)
-                r = F.col(f"__r_{v}")
-                if self.kinds.get(v) in ("node", "rel"):
-                    c = l.getField("_id").eqNullSafe(r.getField("_id"))
-                else:
-                    c = l.eqNullSafe(r)
-                cond = c if cond is None else cond & c
-            out = df.join(right, cond, "left")
-            return out.drop(*[f"__r_{v}" for v in shared])
-        sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-        # usage analysis (scan elision, length-only shortest paths) reads
-        # the WHOLE statement — without it, an uncorrelated OPTIONAL
-        # MATCH shortestPath would emit a {len} stub even when a later
-        # clause consumes nodes(p)/relationships(p)
-        sub.query_ast = getattr(self, "query_ast", None)
-        matched = sub._match(None, inner)
+        sub = self._subtranslator(shared)
+        matched = sub._match(self._argument_rows(df, shared, False),
+                             A.Match(m.parts, optional=False, where=m.where))
         self._merge_sub_scope(sub)
-        return df.join(matched, F.lit(True), "left")
+        right = matched.select(
+            *[F.col(v).alias(f"__r_{v}") for v in shared],
+            *[c for c in matched.columns if c not in shared])
+        return self._join_back(df, right, {v: f"__r_{v}" for v in shared},
+                               "left", null_safe=True)
 
     def _preagg_optional_count(self, df: Optional[DataFrame], m: A.Match,
                                nxt) -> Optional[Tuple[DataFrame, A.Projection]]:
@@ -3243,6 +3215,129 @@ class Translator:
             F.col("__pnodes").alias("nodes"),
             F.col(pvar).getField("rels").alias("rels"))).drop("__pnodes")
 
+    # ---- correlated Apply (SURVEY §2.5) ---------------------------------
+
+    def _subtranslator(self, shared: List[str],
+                       hid: Optional[Dict[str, str]] = None,
+                       base: Optional[DataFrame] = None,
+                       graph: Optional[PropertyGraph] = None) -> "Translator":
+        """The one constructor of a subquery translator.  Every correlated
+        form de-correlates the same way: the distinct argument rows
+        (``_argument_rows``) feed the right-hand side run by this
+        translator, whose result joins back on the correlation keys
+        (``_join_back``).  The SURVEY §2.5 operator each caller renders:
+
+        - Apply: CALL {} (``_call_sub_body``), shortestPath() values
+          (``_lower_shortest_expr[_unbound]``, join-back only)
+        - SemiApply / LetSemiApply: EXISTS {} / COUNT {} and pattern
+          predicates (``_lower_predicates``, ``_lower_query_sub``)
+        - RollUpApply: COLLECT {} (``_lower_collect_sub``), pattern
+          comprehensions (``_lower_pattern_comp``)
+        - Optional: OPTIONAL MATCH (``_optional_match``)
+
+        With no shared variable there is no argument: the right side runs
+        once and joins back on True — no translate-time Spark action.
+
+        The translator sees the shared variables' kinds and labels, and
+        the enclosing statement's AST (usage analyses — scan elision,
+        length-only shortest paths — read the whole statement; a larger
+        root only makes them more conservative).  ``hid`` maps each shared
+        variable to its hidden correlation copy threaded through the body:
+        those columns are the body's per-argument partition (paging, and
+        the empty-group recovery of a body aggregation over ``base``)."""
+        sub = Translator(self.spark, graph or self.graph, self.params,
+                         catalog=self.catalog)
+        sub.query_ast = getattr(self, "query_ast", None)
+        sub.kinds.update({v: self.kinds[v] for v in shared if v in self.kinds})
+        sub.var_labels.update({v: self.var_labels[v] for v in shared
+                               if v in self.var_labels})
+        if hid:
+            sub.kinds.update({h: self.kinds.get(v, "scalar")
+                              for v, h in hid.items()})
+            sub.partition_cols = list(hid.values())
+            sub.partition_base = base
+        return sub
+
+    def _argument_rows(self, df: DataFrame, shared: List[str],
+                       drop_null_entities: bool,
+                       hid: Optional[Dict[str, str]] = None
+                       ) -> Optional[DataFrame]:
+        """Apply's argument: the distinct tuples of the shared variables,
+        plus the hidden copies ``hid`` when given; None when nothing is
+        shared.  ``drop_null_entities``: a NULL node/rel argument matches
+        no pattern (COUNT of a null binding is 0, EXISTS false, COLLECT
+        [] — CountExpressionAcceptance 'COUNT should return zero for NULL
+        nodes/relationships'), so those rows need not run at all."""
+        if not shared:
+            return None
+        base = df.select(*shared).dropDuplicates()
+        if drop_null_entities:
+            for v in shared:
+                if self.kinds.get(v) in ("node", "rel"):
+                    base = base.filter(F.col(v).getField("_id").isNotNull())
+        for v, h in (hid or {}).items():
+            base = base.withColumn(h, F.col(v))
+        return base
+
+    @staticmethod
+    def _run_body(sub: "Translator", base: Optional[DataFrame],
+                  q: A.SingleQuery) -> DataFrame:
+        """Run a subquery body over its argument rows (uncorrelated: as a
+        query of its own, with the count fast paths)."""
+        return sub._single(q) if base is None else sub._single_over(base, q)
+
+    def _join_back(self, df: DataFrame, right: DataFrame,
+                   keys: Dict[str, str], how: str, null_safe: bool,
+                   one_row: bool = False) -> DataFrame:
+        """Join the right side of an Apply back onto ``df``.  ``keys`` maps
+        each shared variable to its column in ``right`` (dropped after the
+        join).  Nodes and rels compare by ``_id``: plain equality when the
+        argument rows dropped null entities (``null <=> x`` ≡ ``null = x``
+        under a left join then, and a null-safe key plans as
+        hashpartitioning(coalesce(k, 0), isnull(k)) — an exchange no
+        neighbouring operator can reuse), null-safe where null arguments
+        are kept.  Scalars always compare null-safe: the reference pairs
+        a null argument with its own subquery result.  With no key the
+        join is on True, and ``one_row`` (an aggregate's single row) is
+        broadcast."""
+        cond = None
+        for v, r in keys.items():
+            lc, rc = F.col(v), F.col(r)
+            if self.kinds.get(v) in ("node", "rel"):
+                lc, rc = lc.getField("_id"), rc.getField("_id")
+                c = lc.eqNullSafe(rc) if null_safe else lc == rc
+            else:
+                c = lc.eqNullSafe(rc)
+            cond = c if cond is None else cond & c
+        if cond is None:
+            return df.join(F.broadcast(right) if one_row else right,
+                           F.lit(True), how)
+        return df.join(right, cond, how).drop(*keys.values())
+
+    def _semi_apply(self, df: DataFrame, matched: DataFrame,
+                    keys: Dict[str, str], mode: str
+                    ) -> Tuple[DataFrame, A.Expr]:
+        """EXISTS / COUNT of a de-correlated match: per argument tuple
+        (``keys``: shared variable -> its column in ``matched``) a true
+        flag or a match count, left-joined back and defaulted to false /
+        0 (SemiApply / LetSemiApply, LP:3659)."""
+        rkeys = [F.col(c).alias(f"__r_{v}") for v, c in keys.items()]
+        if mode == "exists":
+            col = self._anon_var("exists")
+            right = (matched.select(*rkeys).dropDuplicates()
+                     .withColumn(col, F.lit(True)))
+            default = F.lit(False)
+        else:
+            col = self._anon_var("count")
+            right = matched.groupBy(*rkeys).agg(
+                F.count(F.lit(1)).alias(col))
+            default = F.lit(0)
+        out = self._join_back(df, right, {v: f"__r_{v}" for v in keys},
+                              "left", null_safe=False, one_row=True)
+        out = out.withColumn(col, F.coalesce(F.col(col), default))
+        self.kinds[col] = "scalar"
+        return out, A.Var(col)
+
     # ---- subquery-predicate lowering ------------------------------------
 
     def _lower_predicates(self, df: DataFrame, expr: A.Expr
@@ -3303,59 +3398,19 @@ class Translator:
                 return self._lower_pattern_comp(df, e)
             return _map_threading(walk, df, e)
 
-        def correlate(parts: List[A.PatternPart], where=None) -> List[str]:
+        def pattern_sub(cur_df: DataFrame, parts, where, mode: str
+                        ) -> Tuple[DataFrame, A.Expr]:
             # any outer-scope name referenced anywhere in the subquery —
             # pattern variables, property/WHERE expressions — is an
             # implicit correlation (reference: SemiApply LP:3659 keeps the
             # outer row as the Apply argument)
-            pv = set()
-            for part in parts:
-                pv |= _collect_var_names(part)
-            if where is not None:
-                pv |= _collect_var_names(where)
-            return [v for v in df.columns if v in pv]
-
-        def build_matched(cur_df: DataFrame, parts, where) -> Tuple[DataFrame, List[str]]:
-            shared = correlate(parts, where)
-            base = cur_df.select(*shared).dropDuplicates() if shared else None
-            if base is not None:
-                # a NULL node/rel argument matches no pattern — COUNT of
-                # a null binding is 0, EXISTS false, COLLECT []
-                # (CountExpressionAcceptance 'COUNT should return zero
-                # for NULL nodes/relationships')
-                for v in shared:
-                    if self.kinds.get(v) in ("node", "rel"):
-                        base = base.filter(
-                            F.col(v).getField("_id").isNotNull())
-            sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-            sub.kinds.update(self.kinds)
-            sub.var_labels.update(
-                {v: self.var_labels[v] for v in shared
-                 if v in self.var_labels})
-            matched = sub._match(base, A.Match(parts, where=where))
-            return matched, shared
-
-        def join_on_shared(cur_df: DataFrame, right: DataFrame,
-                           shared: List[str], how: str) -> DataFrame:
-            cond = None
-            for v in shared:
-                l, r = F.col(v), F.col(f"__r_{v}")
-                if self.kinds.get(v) in ("node", "rel"):
-                    # plain equality, NOT eqNullSafe: build_matched filters
-                    # the right side to non-null _id (null bindings match
-                    # no pattern), and `null <=> non-null` ≡ `null =
-                    # non-null` under a left join.  A null-safe key plans
-                    # as hashpartitioning(coalesce(k,0), isnull(k)) — an
-                    # exchange no neighbouring operator can reuse, and at
-                    # scale every null left row lands in one partition
-                    c = l.getField("_id") == r.getField("_id")
-                else:
-                    # scalars CAN be null on both sides (the reference
-                    # pairs a null argument row with its subquery result)
-                    c = l.eqNullSafe(r)
-                cond = c if cond is None else cond & c
-            out = cur_df.join(right, cond if cond is not None else F.lit(True), how)
-            return out.drop(*[f"__r_{v}" for v in shared])
+            names = _collect_var_names((parts, where))
+            shared = [v for v in cur_df.columns if v in names]
+            sub = self._subtranslator(shared)
+            matched = sub._match(self._argument_rows(cur_df, shared, True),
+                                 A.Match(parts, where=where))
+            return self._semi_apply(cur_df, matched,
+                                    {v: v for v in shared}, mode)
 
         def lower_exists(cur_df: DataFrame, e: A.ExistsSub
                          ) -> Tuple[DataFrame, A.Expr]:
@@ -3382,18 +3437,7 @@ class Translator:
                                                     F.lit(False))))
                 self.kinds[flag] = "scalar"
                 return out, A.Var(flag)
-            matched, shared = build_matched(cur_df, e.pattern, e.where)
-            flag = self._anon_var("exists")
-            if not shared:
-                has = matched.limit(1).count() > 0
-                return cur_df, A.Lit(bool(has))
-            right = matched.select(
-                *[F.col(v).alias(f"__r_{v}") for v in shared]
-            ).dropDuplicates().withColumn(flag, F.lit(True))
-            out = join_on_shared(cur_df, right, shared, "left")
-            out = out.withColumn(flag, F.coalesce(F.col(flag), F.lit(False)))
-            self.kinds[flag] = "scalar"
-            return out, A.Var(flag)
+            return pattern_sub(cur_df, e.pattern, e.where, "exists")
 
         def lower_count(cur_df: DataFrame, e: A.CountSub
                         ) -> Tuple[DataFrame, A.Expr]:
@@ -3419,18 +3463,7 @@ class Translator:
                                                    F.lit(0).cast("long"))))
                 self.kinds[cnt] = "scalar"
                 return out, A.Var(cnt)
-            matched, shared = build_matched(cur_df, e.pattern, e.where)
-            cnt = self._anon_var("count")
-            if not shared:
-                k = matched.count()
-                return cur_df, A.Lit(int(k))
-            right = matched.groupBy(
-                *[F.col(v).alias(f"__r_{v}") for v in shared]
-            ).agg(F.count(F.lit(1)).alias(cnt))
-            out = join_on_shared(cur_df, right, shared, "left")
-            out = out.withColumn(cnt, F.coalesce(F.col(cnt), F.lit(0)))
-            self.kinds[cnt] = "scalar"
-            return out, A.Var(cnt)
+            return pattern_sub(cur_df, e.pattern, e.where, "count")
 
         return walk(df, expr)
 
@@ -3509,100 +3542,45 @@ class Translator:
         """EXISTS/COUNT whose body is a full query (possibly a UNION):
         run each branch correlated on the shared outer variables (threaded
         through every projection as hidden columns, like COLLECT {}), union
-        the branches, then per-outer-row flag/count via groupBy + left
-        join (SemiApply / decorrelated count, LP:3659)."""
+        the branches, then flag/count per argument (SemiApply /
+        decorrelated count, LP:3659)."""
         self._check_subquery_body(body, list(df.columns))
         names = _collect_var_names(body)
         shared = [c for c in df.columns if c in names]
         queries = body.queries if isinstance(body, A.UnionQuery) else [body]
-        distinct_union = isinstance(body, A.UnionQuery) and not body.all
-        col = self._anon_var("qs")
-        if not shared:
-            total = 0
-            frames = []
-            for q in queries:
-                sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-                frames.append(sub._single(q))
-            if mode == "exists":
-                has = any(f.limit(1).count() > 0 for f in frames)
-                return df, A.Lit(bool(has))
-            allf = frames[0]
-            for f in frames[1:]:
-                allf = allf.unionByName(f)
-            if distinct_union:
-                allf = allf.dropDuplicates()
-            return df, A.Lit(int(allf.count()))
-
+        distinct_count = (mode == "count" and isinstance(body, A.UnionQuery)
+                          and not body.all)
         hid = {v: "_" + self._anon_var(f"corr_{v}_") for v in shared}  # unique per nesting level, "__"-prefixed (scope-hidden)
-        base = df.select(*shared).dropDuplicates()
-        for v in shared:
-            if self.kinds.get(v) in ("node", "rel"):
-                # a NULL entity argument matches no body pattern
-                base = base.filter(F.col(v).getField("_id").isNotNull())
-        for v in shared:
-            base = base.withColumn(hid[v], F.col(v))
-        frames = []
+        # a body-global aggregation (RETURN count(…)) emits one row per
+        # argument even when the body matched nothing, so the EXISTS is
+        # true / the COUNT is 1 (ExistsExpressionAcceptance 'EXISTS
+        # subquery with aggregation inside should work')
+        base = self._argument_rows(df, shared, True, hid)
+        matched = None
         for q in queries:
-            sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-            sub.partition_cols = list(hid.values())
-            sub.partition_base = base  # empty-group recovery: a body-
-            # global aggregation (RETURN count(…)) emits one row per
-            # argument even when the body matched nothing, so the EXISTS
-            # is true / the COUNT is 1 (ExistsExpressionAcceptance
-            # 'EXISTS subquery with aggregation inside should work')
-            sub.kinds.update(
-                {v: self.kinds[v] for v in shared if v in self.kinds})
-            sub.var_labels.update(
-                {v: self.var_labels[v] for v in shared
-                 if v in self.var_labels})
-            for v in shared:
-                sub.kinds[hid[v]] = self.kinds.get(v, "scalar")
-            threaded = self._thread_corr_clauses(q.clauses, hid, shared)
-            frames.append(sub._single_over(base, A.SingleQuery(threaded)))
-
-        # normalize branch outputs before the union: existence/count only
-        # needs the correlation keys — except UNION DISTINCT counting, which
-        # also needs row identity (entities by id, scalars stringified, so
-        # differently-labeled node structs union cleanly)
-        def norm_branch(f: DataFrame) -> DataFrame:
+            sub = self._subtranslator(shared, hid, base)
+            f = self._run_body(sub, base, A.SingleQuery(
+                self._thread_corr_clauses(q.clauses, hid, shared)))
+            # existence/count only needs the correlation keys — except
+            # UNION DISTINCT counting, which also needs row identity
+            # (entities by id, scalars stringified, so differently-labeled
+            # node structs union cleanly)
             cols = [F.col(h) for h in hid.values()]
-            if distinct_union and mode == "count":
+            if distinct_count:
                 for cname in f.columns:
                     if cname in hid.values():
                         continue
                     t = f.schema[cname].dataType
+                    c = F.col(cname)
                     if isinstance(t, T.StructType) \
                             and "_id" in t.fieldNames():
-                        cols.append(F.col(cname).getField("_id")
-                                    .cast("string").alias(cname))
-                    else:
-                        cols.append(F.col(cname).cast("string").alias(cname))
-            return f.select(*cols)
-
-        frames = [norm_branch(f) for f in frames]
-        matched = frames[0]
-        for f in frames[1:]:
-            matched = matched.unionByName(f)
-        if distinct_union and mode == "count":
+                        c = c.getField("_id")
+                    cols.append(c.cast("string").alias(cname))
+            f = f.select(*cols)
+            matched = f if matched is None else matched.unionByName(f)
+        if distinct_count:
             matched = matched.dropDuplicates()
-        grouped = matched.groupBy(*[F.col(h) for h in hid.values()]).agg(
-            F.count(F.lit(1)).alias(col))
-        cond = None
-        for v in shared:
-            l, r = F.col(v), grouped[hid[v]]
-            if self.kinds.get(v) in ("node", "rel"):
-                c = l.getField("_id").eqNullSafe(r.getField("_id"))
-            else:
-                c = l.eqNullSafe(r)
-            cond = c if cond is None else cond & c
-        out = df.join(grouped, cond, "left").drop(*hid.values())
-        if mode == "exists":
-            out = out.withColumn(col, F.col(col).isNotNull())
-        else:
-            out = out.withColumn(
-                col, F.coalesce(F.col(col), F.lit(0)).cast("long"))
-        self.kinds[col] = "scalar"
-        return out, A.Var(col)
+        return self._semi_apply(df, matched, hid, mode)
 
     def _lower_collect_sub(self, df: DataFrame, e: A.CollectSub
                            ) -> Tuple[DataFrame, A.Expr]:
@@ -3668,49 +3646,18 @@ class Translator:
         inner_q = A.SingleQuery(list(q.clauses[:-1]) + [new_last])
 
         col = self._anon_var("cl")
-        sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-        if not shared:
-            # uncorrelated: aggregate to a ONE-ROW frame and broadcast
-            # crossJoin — never a driver-side collect (the inner query may
-            # be unboundedly large at scale)
-            inner = sub._single(inner_q)
-            agg = self._ordered_collect_expr(inner, okeys)
-            one = inner.agg(agg.alias(col))
-            out = df.crossJoin(F.broadcast(one))
-            self.kinds[col] = "scalar"
-            return out, A.Var(col)
-
         hid = {v: "_" + self._anon_var(f"corr_{v}_") for v in shared}  # unique per nesting level, "__"-prefixed (scope-hidden)
-        base = df.select(*shared).dropDuplicates()
-        for v in shared:
-            if self.kinds.get(v) in ("node", "rel"):
-                # a NULL entity argument matches no body pattern -> []
-                base = base.filter(F.col(v).getField("_id").isNotNull())
-        sub.partition_cols = list(hid.values())  # per-input-row paging
-        sub.kinds.update({v: self.kinds[v] for v in shared if v in self.kinds})
-        sub.var_labels.update(
-            {v: self.var_labels[v] for v in shared
-             if v in self.var_labels})
-        for v in shared:
-            base = base.withColumn(hid[v], F.col(v))
-            sub.kinds[hid[v]] = self.kinds.get(v, "scalar")
-        sub.partition_base = base  # empty-group recovery for body aggs
-        threaded = self._thread_corr_clauses(inner_q.clauses, hid, shared)
-        matched = sub._single_over(base, A.SingleQuery(threaded))
-
-        agg = self._ordered_collect_expr(matched, okeys)
+        base = self._argument_rows(df, shared, True, hid)
+        sub = self._subtranslator(shared, hid, base)
+        matched = self._run_body(sub, base, A.SingleQuery(
+            self._thread_corr_clauses(inner_q.clauses, hid, shared)))
+        # one list per argument (uncorrelated: a ONE-ROW aggregate — never
+        # a driver-side collect, the inner query may be unboundedly large)
         grouped = matched.groupBy(*[F.col(h) for h in hid.values()]).agg(
-            agg.alias(col))
-        cond = None
-        for v in shared:
-            l, r = F.col(v), grouped[hid[v]]
-            if self.kinds.get(v) in ("node", "rel"):
-                c = l.getField("_id").eqNullSafe(r.getField("_id"))
-            else:
-                c = l.eqNullSafe(r)
-            cond = c if cond is None else cond & c
+            self._ordered_collect_expr(matched, okeys).alias(col))
         et = grouped.schema[col].dataType.simpleString()
-        out = df.join(grouped, cond, "left").drop(*hid.values())
+        out = self._join_back(df, grouped, hid, "left", null_safe=False,
+                              one_row=True)
         out = out.withColumn(col, F.coalesce(F.col(col), F.array().cast(et)))
         self.kinds[col] = "scalar"
         return out, A.Var(col)
@@ -3815,12 +3762,7 @@ class Translator:
     def _lower_pattern_comp(self, df: DataFrame, e: A.PatternComp
                             ) -> Tuple[DataFrame, A.Expr]:
         """Pattern comprehension -> RollUpApply (LP:3534): groupBy+collect_list."""
-        parts = [e.pattern]
-        pv = set()
-        for el in e.pattern.elements:
-            v = getattr(el, "var", None)
-            if v:
-                pv.add(v)
+        pv = {getattr(el, "var", None) for el in e.pattern.elements}
         # outer variables referenced by the comprehension's predicates or
         # projection correlate too — `[(a:A WHERE a.prop > x)-->(b) | …]`
         # must see the enclosing row's `x`
@@ -3828,10 +3770,9 @@ class Translator:
         referenced = _collect_var_names((e.pattern, e.where, e.projection),
                                         binders=False)
         shared = [v for v in df.columns if v in pv or v in referenced]
-        base = df.select(*shared).dropDuplicates() if shared else None
-        sub = Translator(self.spark, self.graph, self.params, catalog=self.catalog)
-        sub.kinds.update(self.kinds)
-        matched = sub._match(base, A.Match(parts, where=e.where))
+        sub = self._subtranslator(shared)
+        matched = sub._match(self._argument_rows(df, shared, False),
+                             A.Match([e.pattern], where=e.where))
         # the projection may itself contain pattern comprehensions /
         # subquery expressions (nested RollUpApply,
         # PatternExpressionAcceptance 'Nested pattern comprehensions') —
@@ -3839,27 +3780,15 @@ class Translator:
         matched, proj = sub._lower_all(matched, e.projection)
         val = sub._compiler(matched).compile(proj)
         col = self._anon_var("pc")
-        if not shared:
-            # uncorrelated: one-row aggregate + broadcast crossJoin, not a
-            # driver collect (same RollUpApply semantics, no driver OOM)
-            one = matched.agg(F.collect_list(val).alias(col))
-            out = df.crossJoin(F.broadcast(one))
-            self.kinds[col] = "scalar"
-            return out, A.Var(col)
+        keys = {v: f"__r_{v}" for v in shared}
         right = matched.select(
-            *[F.col(v).alias(f"__r_{v}") for v in shared], val.alias("__pc_val"))
-        grouped = right.groupBy(*[F.col(f"__r_{v}") for v in shared]).agg(
+            *[F.col(v).alias(r) for v, r in keys.items()],
+            val.alias("__pc_val"))
+        grouped = right.groupBy(*keys.values()).agg(
             F.collect_list("__pc_val").alias(col))
-        cond = None
-        for v in shared:
-            l, r = F.col(v), F.col(f"__r_{v}")
-            if self.kinds.get(v) in ("node", "rel"):
-                c = l.getField("_id").eqNullSafe(r.getField("_id"))
-            else:
-                c = l.eqNullSafe(r)
-            cond = c if cond is None else cond & c
         elem_t = grouped.schema[col].dataType.simpleString()
-        out = df.join(grouped, cond, "left").drop(*[f"__r_{v}" for v in shared])
+        out = self._join_back(df, grouped, keys, "left", null_safe=True,
+                              one_row=True)
         out = out.withColumn(col, F.coalesce(F.col(col), F.array().cast(elem_t)))
         self.kinds[col] = "scalar"
         return out, A.Var(col)
@@ -3918,7 +3847,7 @@ class Translator:
         # (NestedPlanExpression.scala GetValue) — bind them from their own
         # label/prop scans, run the BFS over the distinct bound prefix,
         # keep ONE deterministic shortest path per prefix value, and
-        # left-join (or broadcast-crossJoin when fully uncorrelated)
+        # left-join (on True, broadcast, when fully uncorrelated)
         if not (els[0].var and els[2].var
                 and els[0].var in df.columns
                 and els[2].var in df.columns):
@@ -3935,15 +3864,10 @@ class Translator:
         # node/rel contents eagerly, the expression may read anything
         res = self._resolve_path_rels(res, pvar)
         res = self._resolve_path_nodes(res, pvar)
-        res = res.select(
-            F.col(avar).getField("_id").alias("__spx_a"),
-            F.col(bvar).getField("_id").alias("__spx_b"),
-            F.col(pvar))
-        out = df.join(
-            res,
-            (F.col(avar).getField("_id") == F.col("__spx_a"))
-            & (F.col(bvar).getField("_id") == F.col("__spx_b")),
-            "left").drop("__spx_a", "__spx_b")
+        keys = {avar: "__spx_a", bvar: "__spx_b"}
+        res = res.select(*[F.col(v).alias(r) for v, r in keys.items()],
+                         F.col(pvar))
+        out = self._join_back(df, res, keys, "left", null_safe=False)
         self.kinds[pvar] = "path"
         return out, A.Var(pvar)
 
@@ -3971,9 +3895,9 @@ class Translator:
         pvar = self._anon_var("spx")
         part = dataclasses.replace(
             e.pattern, elements=[a_pat, rp, b_pat], path_var=pvar)
-        base = (df.select(*bound).dropDuplicates() if bound else None)
         pend: List[A.Expr] = []
-        res = shortest_path(self, base, part, pend, force_full_paths=True)
+        res = shortest_path(self, self._argument_rows(df, bound, False),
+                            part, pend, force_full_paths=True)
         for p in pend:
             res = res.filter(self._compiler(res).compile(p).cast("boolean"))
         res = self._resolve_path_rels(res, pvar)
@@ -3990,19 +3914,11 @@ class Translator:
             "__spx_rn",
             F.row_number().over(w.orderBy(length.asc(), tie.asc())))
             .filter(F.col("__spx_rn") == 1).drop("__spx_rn"))
-        if not bound:
-            one = res.select(pvar).limit(1)
-            out = df.join(F.broadcast(one), F.lit(True), "left")
-        else:
-            keys = [(v, f"__spx_{v}") for v in bound]
-            right = res.select(
-                *[F.col(v).getField("_id").alias(h) for v, h in keys],
-                F.col(pvar))
-            cond = None
-            for v, h in keys:
-                c = F.col(v).getField("_id").eqNullSafe(F.col(h))
-                cond = c if cond is None else cond & c
-            out = df.join(right, cond, "left").drop(*[h for _, h in keys])
+        keys = {v: f"__spx_{v}" for v in bound}
+        right = res.select(*[F.col(v).alias(r) for v, r in keys.items()],
+                           F.col(pvar))
+        out = self._join_back(df, right, keys, "left", null_safe=True,
+                              one_row=True)
         self.kinds[pvar] = "path"
         return out, A.Var(pvar)
 
@@ -4599,6 +4515,8 @@ class Translator:
                         raise TranslateError(
                             "Expression in a CALL {} subquery's RETURN "
                             "must be aliased (NoExpressionAlias)")
+        shared = ([v for v in clause.imports if v in df.columns]
+                  if df is not None else [])
         if not any(isinstance(c, A.Projection) and c.is_return
                    for b in branches for c in b.clauses):
             # unit subquery (SubqueryForeach LP:3897 / TransactionForeach
@@ -4608,52 +4526,22 @@ class Translator:
             # through unchanged
             for branch in branches:
                 body, use_g = self._hoist_use(branch)
-                sub = Translator(self.spark, use_g or self.graph,
-                                 self.params, catalog=self.catalog)
+                sub = self._subtranslator(shared, graph=use_g)
                 if df is not None:
                     # the body runs once per incoming row
                     # (CallSubqueryPipe semantics) — a zero-column select
                     # keeps the cardinality when nothing is imported
-                    shared = [v for v in clause.imports if v in df.columns]
-                    sub.kinds.update(
-                        {v: self.kinds[v]
-                         for v in shared if v in self.kinds})
                     sub._single_over(df.select(*shared), body)
                 else:
                     sub._single(body)
                 self._adopt_effects(sub)
             return df if df is not None else self.spark.range(1).select(
                 F.lit(1).alias("__unit"))
-        body_updates = any(
-            isinstance(c, (A.Create, A.Merge, A.SetClause, A.RemoveClause,
-                           A.Delete, A.Foreach))
-            for b in branches for c in b.clauses)
-        if df is None or (not clause.imports and not body_updates):
-            inner = None
-            branch_subs = []
-            for b in branches:
-                b, use_g = self._hoist_use(b)
-                sub = Translator(self.spark, use_g or self.graph,
-                                 self.params, catalog=self.catalog)
-                frame = sub._single(b)
-                branch_subs.append(sub)
-                self._adopt_effects(sub)
-                inner = frame if inner is None else inner.unionByName(frame)
-            self._merge_branch_scopes(branch_subs)
-            if not union_all:
-                inner = inner.dropDuplicates()
-            if df is None:
-                return inner
-            if clause.optional:
-                # OPTIONAL CALL {}: an empty subquery null-pads instead of
-                # dropping the input rows
-                return df.join(inner, F.lit(True), "left")
-            return df.crossJoin(inner)
-        import dataclasses
-
-        shared = [v for v in clause.imports if v in df.columns]
         uid = None
-        if body_updates:
+        if df is not None and any(
+                isinstance(c, (A.Create, A.Merge, A.SetClause,
+                               A.RemoveClause, A.Delete, A.Foreach))
+                for b in branches for c in b.clauses):
             # an updating body executes once per INPUT ROW, not per
             # distinct import tuple (CallSubqueryPipe) — a frozen unique
             # row id defeats the dropDuplicates and keys the join-back
@@ -4661,37 +4549,20 @@ class Translator:
             df = self._stats_safe_ckpt(
                 df.withColumn(uid, F.monotonically_increasing_id()))
             shared = shared + [uid]
-        base = df.select(*shared).dropDuplicates()
         # correlation columns must survive the subquery's own projections:
         # thread hidden copies through every WITH/RETURN (they become extra
         # grouping keys under aggregation — exactly the per-input-row
-        # semantics of Apply, LP:855)
+        # semantics of Apply, LP:855; a body-global aggregation still
+        # yields one row per argument through the partition_base recovery)
         hid = {v: "_" + self._anon_var(f"corr_{v}_") for v in shared}  # unique per nesting level, "__"-prefixed (scope-hidden)
-        for v in shared:
-            base = base.withColumn(hid[v], F.col(v))
+        base = self._argument_rows(df, shared, False, hid)
         matched = None
         branch_subs = []
         for b in branches:
             b, use_g = self._hoist_use(b)
-            sub = Translator(self.spark, use_g or self.graph, self.params,
-                             catalog=self.catalog)
-            sub.partition_cols = list(hid.values())  # per-input-row paging
-            sub.partition_base = base  # empty-group recovery for body aggs
-            sub.kinds.update(
-                {v: self.kinds[v] for v in shared if v in self.kinds})
-            sub.var_labels.update(
-                {v: self.var_labels[v] for v in shared
-                 if v in self.var_labels})
-            for v in shared:
-                sub.kinds[hid[v]] = self.kinds.get(v, "scalar")
-            new_clauses = []
-            for c in b.clauses:
-                if isinstance(c, A.Projection):
-                    extra = [A.ReturnItem(A.Var(h), h, h)
-                             for h in hid.values()]
-                    c = dataclasses.replace(c, items=list(c.items) + extra)
-                new_clauses.append(c)
-            frame = sub._single_over(base, A.SingleQuery(new_clauses))
+            sub = self._subtranslator(shared, hid, base, graph=use_g)
+            frame = self._run_body(sub, base, A.SingleQuery(
+                self._thread_corr_clauses(b.clauses, hid, [])))
             for h in hid.values():
                 sub.kinds.pop(h, None)
                 sub.var_labels.pop(h, None)
@@ -4701,38 +4572,14 @@ class Translator:
         self._merge_branch_scopes(branch_subs)
         if not union_all:
             matched = matched.dropDuplicates()
-        # the COUNT bug: a globally-aggregating subquery yields one row per
-        # input row even with zero matches — left join + per-aggregate
-        # defaults (count/sum -> 0, collect -> []); otherwise inner join
-        last = (branches[0].clauses[-1]
-                if len(branches) == 1 and branches[0].clauses else None)
-        defaults: Dict[str, Column] = {}
-        if isinstance(last, A.Projection) and last.is_return and all(
-                contains_aggregate(it.expr) for it in last.items):
-            for it in last.items:
-                name = it.alias or it.text
-                e = it.expr
-                if isinstance(e, A.CountStar) or (
-                        isinstance(e, A.Func) and e.name in ("count", "sum")):
-                    defaults[name] = F.lit(0)
-                elif isinstance(e, A.Func) and e.name == "collect":
-                    defaults[name] = F.array().cast(
-                        matched.schema[name].dataType.simpleString())
-        how = "left" if (defaults or clause.optional) else "inner"
-        cond = None
-        for v in shared:
-            l, r = F.col(v), matched[hid[v]]
-            if self.kinds.get(v) in ("node", "rel"):
-                c = l.getField("_id").eqNullSafe(r.getField("_id"))
-            else:
-                c = l.eqNullSafe(r)
-            cond = c if cond is None else cond & c
-        out = df.join(matched, cond, how).drop(*hid.values())
-        if uid is not None:
-            out = out.drop(uid)
-        for name, d in defaults.items():
-            out = out.withColumn(name, F.coalesce(F.col(name), d))
-        return out
+        if df is None:
+            return matched
+        # OPTIONAL CALL {}: an empty subquery null-pads instead of
+        # dropping the input rows
+        out = self._join_back(df, matched, hid,
+                              "left" if clause.optional else "inner",
+                              null_safe=True)
+        return out.drop(uid) if uid is not None else out
 
     def _single_over(self, base: DataFrame, q: A.SingleQuery) -> DataFrame:
         df: Optional[DataFrame] = base
@@ -5077,16 +4924,10 @@ class Translator:
             # aggregation (the reference's Apply + EagerAggregation
             # contract).  groupBy drops empty groups, so join the
             # aggregate back onto the distinct correlation tuples.
-            keys = pbase.select(*group_names).dropDuplicates()
             ren = {c: f"__gk_{c}" for c in group_names}
-            r2 = agged
-            for c, rc in ren.items():
-                r2 = r2.withColumnRenamed(c, rc)
-            cond = None
-            for c in group_names:
-                eq = F.col(c).eqNullSafe(F.col(ren[c]))
-                cond = eq if cond is None else cond & eq
-            agged = keys.join(r2, cond, "left").drop(*ren.values())
+            agged = self._join_back(
+                pbase.select(*group_names).dropDuplicates(),
+                agged.withColumnsRenamed(ren), ren, "left", null_safe=True)
             for ph, e in agg_srcs:
                 t = agged.schema[ph].dataType
                 if isinstance(e, A.CountStar) or (

@@ -59,3 +59,18 @@ def diamond_graph(spark):
             "id long, src long, dst long, type string"),
     }
     return PropertyGraph(nodes, rels)
+
+
+@pytest.fixture(scope="session")
+def five_graph(spark):
+    """N {name: a..d}; E edges a->b, a->c, b->d, c->d, d->c."""
+    from neo4j_spark.graph import PropertyGraph
+
+    nodes = {"N": spark.createDataFrame(
+        [(i, ["N"], chr(96 + i)) for i in (1, 2, 3, 4)],
+        "id long, labels array<string>, name string")}
+    rels = {"E": spark.createDataFrame(
+        [(10, 1, 2, "E"), (11, 1, 3, "E"), (12, 2, 4, "E"),
+         (13, 3, 4, "E"), (14, 4, 3, "E")],
+        "id long, src long, dst long, type string")}
+    return PropertyGraph(nodes, rels)

@@ -169,6 +169,48 @@ def test_translate_has_no_driver_collect():
     assert "dropDuplicates().limit(cap + 1)" in ctx, ctx
 
 
+@pytest.mark.parametrize("sub, expected", [
+    ("EXISTS { MATCH (x:N {name:'d'}) RETURN x }", True),
+    ("COUNT { MATCH (x:N)-->(y) RETURN x }", 5),
+    ("EXISTS { (x:N {name:'d'})-->() }", True),
+    ("COUNT { (x:N)-->() }", 5),
+])
+def test_uncorrelated_subquery_runs_no_translate_jobs(spark, five_graph,
+                                                      sub, expected):
+    """An uncorrelated EXISTS/COUNT {} is a lazy one-row aggregate joined
+    in on True: translating the statement runs no Spark job."""
+    import uuid
+
+    sc = spark.sparkContext
+    cypher(spark, "MATCH (n:N) RETURN n.name", five_graph).collect()
+    group = f"translate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "translate only")
+    try:
+        df = cypher(spark, f"MATCH (n:N) RETURN n.name AS name, {sub} AS v",
+                    five_graph)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (n, expected) for n in "abcd"]
+
+
+@pytest.mark.parametrize("sub", [
+    "COLLECT { MATCH (c)-[:PLACED]->(o:Order) RETURN o.orderkey }",
+    "COUNT { MATCH (c)-[:PLACED]->(o:Order) WITH o "
+    "WHERE o.totalprice > 1000 RETURN o }",
+])
+def test_correlated_subquery_joins_back_on_plain_id(spark, tpch_graph, sub):
+    """The argument rows of a correlated COLLECT {} / COUNT {} drop null
+    entities, so the join-back compares ``_id`` with plain equality: a
+    null-safe key would plan as an exchange no neighbour can reuse."""
+    df = cypher(spark, "MATCH (c:Customer) RETURN c.custkey AS k, "
+                f"{sub} AS v", tpch_graph)
+    joins = [ln for ln in optimized_of(df).splitlines() if "Join" in ln]
+    assert joins
+    assert not [ln for ln in joins if "<=>" in ln and "_id" in ln], joins
+
+
 def test_no_new_env_switches():
     """Product code reads only the two known NEO4J_SPARK_* environment
     switches: SCHEMA_PRUNE (the unpruned reference run of
