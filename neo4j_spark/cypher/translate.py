@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types a
 from . import ast as A
 from .exprs import AGG_FNS, ExprCompiler, contains_aggregate, is_agg_fn
 from ..graph import PropertyGraph, unesc_prop as _unesc_prop
+from ..session import local_frame
 
 NODE_META = ("id", "labels")
 REL_META = ("id", "src", "dst", "type")
@@ -561,7 +562,7 @@ class Translator:
             return None
         name = item.alias or item.text
         schema = T.StructType([T.StructField(name, T.LongType(), False)])
-        return self.spark.createDataFrame([(int(n),)], schema)
+        return local_frame(self.spark, [(int(n),)], schema)
 
     def _anon_var(self, prefix: str = "a") -> str:
         # GLOBAL counter: a nested sub-Translator starting its own count

@@ -23,6 +23,8 @@ from typing import Any, Dict, Iterable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .session import local_frame
+
 NODE_META = ("id", "labels")
 REL_META = ("id", "src", "dst", "type")
 
@@ -58,7 +60,7 @@ EMPTY_REL_SCHEMA = "id long, src long, dst long, type string"
 
 def _empty_frame(schema: str) -> DataFrame:
     spark = SparkSession.getActiveSession()
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _union_by_name(frames: Sequence[DataFrame],

@@ -477,16 +477,19 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
     treats it as such (a~b and b~c means keep one of {a, b, c}) — exactly
     a connected-components problem over the candidate-pair graph.
 
-    At 100 TB scale the pair graph is SPARSE (LSH candidates, not all
-    pairs), and star contraction converges in O(log^2 n) rounds
-    independent of component diameter — chains of near-dups (crawl
-    mirrors) are the common worst case that breaks label propagation."""
+    The pairs are read once.  A pair list within the broadcast bound
+    (``connected_components``) is labelled on the driver, so the
+    common case — LSH candidates verified down to a few hundred pairs —
+    costs one collect and a broadcast table.  At 100 TB scale the pair
+    graph is larger but still SPARSE (LSH candidates, not all pairs); it
+    stays distributed, and star contraction converges in O(log^2 n)
+    rounds independent of component diameter — chains of near-dups
+    (crawl mirrors) are the common worst case that breaks label
+    propagation."""
     from ..operators.algorithms import connected_components
 
     rels = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    nodes = (pairs.select(F.col(id_a).alias("id"))
-             .union(pairs.select(id_b)).dropDuplicates())
-    return (connected_components(nodes, rels, max_iter=max_iter)
+    return (connected_components(None, rels, max_iter=max_iter)
             .withColumnRenamed("comp", "group"))
 
 
@@ -495,17 +498,15 @@ def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
                    id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Drop all but one document per duplicate component.
 
-    policy='min_id' keeps the smallest id (deterministic, join-free
-    tie-break); policy='longest' keeps the longest ``length_col`` value
-    (ties broken by id).  Docs in no pair pass through untouched — the
-    anti-join side is only the LOSERS, so the common case (mostly-unique
-    corpus) broadcasts a small exclusion list rather than rewriting the
-    corpus."""
+    policy='min_id' keeps the smallest id, which already is the component
+    label, so the losers are a filter with no winner table; policy=
+    'longest' keeps the longest ``length_col`` value (ties broken by
+    id).  Docs in no pair pass through untouched — the anti-join side is
+    only the LOSERS, so the common case (mostly-unique corpus) broadcasts
+    a small exclusion list rather than rewriting the corpus."""
     comps = dup_components(pairs, id_a, id_b)
     if policy == "min_id":
-        winners = comps.groupBy("group").agg(F.min("id").alias("_keep"))
-        losers = (comps.join(winners, "group")
-                  .filter(F.col("id") != F.col("_keep")).select("id"))
+        losers = comps.filter(F.col("id") != F.col("group")).select("id")
     elif policy == "longest":
         if length_col is None:
             raise ValueError("policy='longest' needs length_col")

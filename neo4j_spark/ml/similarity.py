@@ -15,6 +15,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, Window as W
 
+from ..session import local_frame
+
 
 def _dbl(a: Column) -> Column:
     """float32 embeddings -> double BEFORE multiplying, so scores agree with
@@ -310,8 +312,8 @@ def save_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     assigned.write.mode("overwrite").partitionBy("_ivf_list") \
         .parquet(os.path.join(path, "lists"))
     spark = df.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+    cdf = local_frame(
+        spark, [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "list_id int, centroid array<double>")
     cdf.coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(path, "centroids"))

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..cypher import ast as A
 from ..graph import NODE_META, REL_META, esc_prop
+from ..session import local_frame
 
 WRITE_BASE = 900 * 10**12
 EPOCH_SPAN = 10**9
@@ -54,9 +55,8 @@ def _ensure_effects(tr) -> Dict[str, int]:
 
 def effects_frame(tr) -> DataFrame:
     eff = _ensure_effects(tr)
-    return tr.spark.createDataFrame(
-        [tuple(eff[k] for k in EFFECT_KEYS)],
-        ", ".join(f"{k} long" for k in EFFECT_KEYS))
+    return local_frame(tr.spark, [tuple(eff[k] for k in EFFECT_KEYS)],
+                       ", ".join(f"{k} long" for k in EFFECT_KEYS))
 
 
 # ---- CREATE ---------------------------------------------------------------

@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import os
+from typing import Sequence, Union
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(app: str = "neo4j_spark", cpus: int | None = None) -> SparkSession:
@@ -40,3 +44,27 @@ def get_spark(app: str = "neo4j_spark", cpus: int | None = None) -> SparkSession
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple],
+                schema: Union[str, StructType]) -> DataFrame:
+    """A small driver-side row list as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>, schema)`` is a PythonRDD: every
+    read of it schedules a job whose tasks start Python workers to
+    unpickle the rows.  Collecting a one-row frame built that way costs
+    1.0-1.4 s of CPU (0.8 s of it in Python workers) and about 300 ms of
+    wall time on a 4-core ``local[4]`` session, and an empty one on one
+    side of a full outer join costs about 2 s of CPU.  Built from an
+    Arrow table the same rows are a ``LocalRelation``: collecting it runs
+    no Spark job (16 ms wall, 30-50 ms CPU), the optimizer sees its exact
+    size, and joins broadcast it.  ``schema`` is a DDL string or a
+    ``StructType``; ``rows`` are tuples in its field order."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)

@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 
 def node_updates_from_events(events: DataFrame) -> DataFrame:
     """Events -> User node upserts: one row per user carrying the batch's
@@ -56,8 +58,8 @@ class ParquetGraphSink:
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.table):
-            return self.spark.createDataFrame(
-                [], "id long, n_events long, total_value double")
+            return local_frame(
+                self.spark, [], "id long, n_events long, total_value double")
         return self.spark.read.parquet(self.table)
 
     def merge_batch(self, updates: DataFrame, batch_id: int = 0) -> None:

@@ -17,6 +17,21 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def spark_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_label_scan_prunes_to_single_shard(spark, tpch_graph):
     """NodeByLabelScan must read ONE parquet dataset, not a filtered union
     of all six (graph.py shard pruning)."""
@@ -179,18 +194,10 @@ def test_uncorrelated_subquery_runs_no_translate_jobs(spark, five_graph,
                                                       sub, expected):
     """An uncorrelated EXISTS/COUNT {} is a lazy one-row aggregate joined
     in on True: translating the statement runs no Spark job."""
-    import uuid
-
-    sc = spark.sparkContext
     cypher(spark, "MATCH (n:N) RETURN n.name", five_graph).collect()
-    group = f"translate-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "translate only")
-    try:
-        df = cypher(spark, f"MATCH (n:N) RETURN n.name AS name, {sub} AS v",
-                    five_graph)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    df, jobs = spark_jobs(spark, lambda: cypher(
+        spark, f"MATCH (n:N) RETURN n.name AS name, {sub} AS v", five_graph))
+    assert jobs == 0
     assert sorted(tuple(r) for r in df.collect()) == [
         (n, expected) for n in "abcd"]
 
@@ -209,6 +216,92 @@ def test_correlated_subquery_joins_back_on_plain_id(spark, tpch_graph, sub):
     joins = [ln for ln in optimized_of(df).splitlines() if "Join" in ln]
     assert joins
     assert not [ln for ln in joins if "<=>" in ln and "_id" in ln], joins
+
+
+def _dedup_inputs(spark):
+    """300 docs and 100 list-built near-dup pairs forming 50 three-chains."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(150) if i % 3 != 2], "id_a long, id_b long")
+    return spark.range(300).withColumnRenamed("id", "doc_id"), pairs
+
+
+def test_keep_canonical_job_budget(spark):
+    """A pair list within the broadcast bound is labelled on the driver:
+    resolving about 100 pairs is a handful of jobs, not two checkpointed
+    shuffle rounds per star-contraction iteration."""
+    from neo4j_spark.ml.dedup import keep_canonical
+
+    docs, pairs = _dedup_inputs(spark)
+    kept, jobs = spark_jobs(spark, lambda: keep_canonical(docs, pairs).count())
+    assert kept == 200
+    assert jobs <= 6, jobs
+
+
+def test_keep_canonical_leaves_nothing_persisted(spark):
+    """Repeated dedup resolution in one long-lived session pins no RDD and
+    caches no relation."""
+    from neo4j_spark.ml.dedup import keep_canonical
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs, pairs = _dedup_inputs(spark)
+    spark.catalog.clearCache()
+    # ids, not a count: RDDs other tests left behind may be cleaned
+    # up meanwhile
+    before = persisted()
+    for _ in range(3):
+        assert keep_canonical(docs, pairs).count() == 200
+        assert persisted() - before == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _update_only(spark, tpch_graph, tmp_path):
+    from neo4j_spark.graph import PropertyGraph
+
+    return cypher(spark, "CREATE (:X)", PropertyGraph({}, {}))
+
+
+def _count_store_row(spark, tpch_graph, tmp_path):
+    return cypher(spark, "MATCH ()-[l:CONTAINS]->() RETURN count(*) AS n",
+                  tpch_graph)
+
+
+def _empty_sink(spark, tpch_graph, tmp_path):
+    from neo4j_spark.streaming.upserts import ParquetGraphSink
+
+    return ParquetGraphSink(spark, str(tmp_path)).read()
+
+
+@pytest.mark.parametrize("build", [_update_only, _count_store_row,
+                                   _empty_sink])
+def test_driver_rows_are_local_relations(spark, tpch_graph, tmp_path, build):
+    """Rows the engine builds on the driver are JVM local relations: no
+    PythonRDD whose every read starts Python workers."""
+    df = build(spark, tpch_graph, tmp_path)
+    assert "LocalRelation" in optimized_of(df)
+    assert "ExistingRDD" not in plan_of(df)
+
+
+def test_no_list_built_frames_on_hot_paths():
+    """``createDataFrame(<list>)`` is a PythonRDD; engine code builds its
+    small frames with ``session.local_frame`` instead.  Pandas inputs are
+    fine: they already go through Arrow."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neo4j_spark"
+    files = [root / "graph.py"] + [
+        f for d in ("cypher", "operators", "ml", "streaming")
+        for f in sorted((root / d).rglob("*.py"))]
+    offenders = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in files for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame" and node.args
+        and isinstance(node.args[0], (ast.List, ast.ListComp))]
+    assert offenders == [], offenders
 
 
 def test_no_new_env_switches():
